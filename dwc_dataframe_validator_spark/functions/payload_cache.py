@@ -33,7 +33,9 @@ r20 hardening (r19 ADVICE/VERDICT):
   r19 entry-only bound let 1024 multi-MB decoded tails accumulate per
   task (warc/tar/zip tails retain whole decompressed payloads) —
   far outside the Arrow batch-sizing memory assumption.  On overflow
-  the cache resets, as before.
+  the cache resets, as before.  A value whose own approximate size
+  exceeds ``max_bytes`` is returned uncached: admitting it would hold
+  the cache over budget and clear it on every later miss.
 - **Miss sentinel**: a private object, not ``None`` — a decode that
   legitimately returns None is cached like any other value instead of
   silently recomputing per row.
@@ -78,11 +80,15 @@ def payload_memo(decode, maxsize: int = 1024,
         )
         hit = cache.get(k, _MISS)
         if hit is _MISS:
+            hit = decode(payload)
+            size = _approx_bytes(hit)
+            if size > max_bytes:
+                return hit
             if len(cache) >= maxsize or held >= max_bytes:
                 cache.clear()
                 held = 0
-            hit = cache[k] = decode(payload)
-            held += _approx_bytes(hit)
+            cache[k] = hit
+            held += size
         return hit
 
     return wrapped

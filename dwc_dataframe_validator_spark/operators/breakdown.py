@@ -87,26 +87,31 @@ def generate_breakdowns(
     """Reference breakdown.py:9-34, including the eventDate-overwrites-
     raw-columns quirk.  ``date_parser`` (default the deterministic
     format table) reaches the eventDate parse; pass ``"pandas"`` for
-    the reference-exact dateutil free-text behavior."""
+    the reference-exact dateutil free-text behavior.
+
+    The raw-column histograms an eventDate would overwrite are never
+    collected; the eventDate ones take their dict positions, so the
+    report (key order included) matches the compute-then-overwrite
+    form."""
     breakdowns: dict[str, dict[str, int]] = {}
     cols = set(df.columns)
-    if "year" in cols:
-        breakdowns["year"] = simple_breakdown(df, "year")
-    if "month" in cols:
-        breakdowns["month"] = simple_breakdown(df, "month")
-    if "day" in cols:
-        breakdowns["day"] = simple_breakdown(df, "day")
+    event = None
+    if "eventDate" in cols:
+        event = dict(zip(
+            ("year", "month", "day"),
+            generate_event_date_breakdown(df, date_parser=date_parser),
+        ))
+    for f in ("year", "month", "day"):
+        if f in cols:
+            breakdowns[f] = (
+                event[f] if event is not None else simple_breakdown(df, f)
+            )
     if "scientificName" in cols:
         breakdowns["scientificName"] = top_values_breakdown(df, "scientificName", 20)
     if "family" in cols:
         breakdowns["family"] = top_values_breakdown(df, "family", 20)
-    if "eventDate" in cols:
-        year_bd, month_bd, day_bd = generate_event_date_breakdown(
-            df, date_parser=date_parser
-        )
-        breakdowns["year"] = year_bd
-        breakdowns["month"] = month_bd
-        breakdowns["day"] = day_bd
+    if event is not None:
+        breakdowns.update(event)
     return breakdowns
 
 

@@ -469,14 +469,15 @@ def fingerprint(
     )
 
 
-#: split-count memo for spread_small_scan, keyed on (scan files,
-#: parallelism).  The number of scan splits is a pure function of the
-#: input file set and the session's split configuration, so probing it
-#: once per distinct file set per driver is exact; this is PLAN
-#: metadata, never query results (every query still computes from the
-#: parquet inputs).  Bounded by the number of distinct table file sets
-#: a driver touches.
+#: split-count memo for spread_small_scan, keyed on the scan's file
+#: tuple, the parallelism and the two file-split settings.  The number
+#: of scan splits is a pure function of those, so probing it once per
+#: key per driver is exact; this is PLAN metadata, never query results
+#: (every query still computes from the parquet inputs).  A streaming
+#: caller resolves a fresh file set per micro-batch, so the memo is
+#: cleared once it holds ``_SPLIT_COUNT_MEMO_MAX`` entries.
 _SPLIT_COUNT_MEMO: dict = {}
+_SPLIT_COUNT_MEMO_MAX = 256
 
 
 def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -495,9 +496,12 @@ def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
     a driver-side plan-to-RDD conversion (~50 ms per call) — it is now
     memoized per (input file set, parallelism), since narrow
     transforms preserve the scan's partition count and the split
-    count of a file set is fixed within a session.  Frames with no
-    resolvable input files (in-memory relations) skip the memo —
-    their partition counts are not keyed by anything stable."""
+    count of a file set is fixed by the split settings in the key.
+    Apply it only to a plain scan under narrow transforms: a frame
+    repartitioned or coalesced over the same files would read the
+    scan's count.  Frames with no resolvable input files (in-memory
+    relations) skip the memo — their partition counts are not keyed
+    by anything stable."""
     if df.isStreaming:
         return df  # no .rdd on streaming frames; micro-batches spread upstream
     sc = df.sparkSession.sparkContext
@@ -506,11 +510,21 @@ def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
         files = tuple(df.inputFiles())
     except Exception:  # pragma: no cover - defensive
         files = ()
-    key = (hash(files), par) if files else None
+    key = None
+    if files:
+        conf = df.sparkSession.conf
+        key = (
+            files,
+            par,
+            conf.get("spark.sql.files.maxPartitionBytes"),
+            conf.get("spark.sql.files.openCostInBytes"),
+        )
     n = _SPLIT_COUNT_MEMO.get(key) if key is not None else None
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
+            if len(_SPLIT_COUNT_MEMO) >= _SPLIT_COUNT_MEMO_MAX:
+                _SPLIT_COUNT_MEMO.clear()
             _SPLIT_COUNT_MEMO[key] = n
     if n < max(2, par // 2):
         return df.repartition(par, F.col(key_col))

@@ -347,10 +347,9 @@ def _content_encoding_pinned_oracle() -> str:
     Classes 6/7 (a mislabeled Compressed_Block over raw HTML / junk
     brotli) and the %11 truncated-zstd plant pin
     ``body_decoded=false``; classes 10/11 are REAL compressed-block
-    zstd frames the round-16 pure FSE/Huffman tier decodes — both
-    asserted here to regenerate their class HTML exactly.  The junk
-    payloads fail the native codecs too, so the pinned rows are
-    environment-independent."""
+    zstd frames the pure RFC 8878 FSE/Huffman tier decodes and
+    classes 12/13 compressed brotli streams pyarrow's native brotli
+    decodes — all four asserted here to decode."""
     import re as _re
 
     from ..sources import warc as warcmod
@@ -376,7 +375,7 @@ def _content_encoding_pinned_oracle() -> str:
         # to pin)
         rows[cls] = (ce, ch, dec, enc, strip(t) if dec else None)
         if cls in (10, 11, 12, 13):
-            assert dec, cls  # the pure entropy tiers must decode these
+            assert dec, cls  # the entropy decoders must decode these
     bt, benc, _bs, bce, bch, bdec = warcmod.decode_payload_full(
         warcmod.build_content_encoding_blob(0)  # 0 % 11 == 0: truncated
     )
@@ -423,19 +422,17 @@ def _content_encoding_pinned_oracle() -> str:
 def http_content_encoding_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """br/zstd Content-Encoding decode (sources/warc.py
     ``_brotli_decode`` / ``_zstd_decode`` behind ``decode_http_body``):
-    the optional-backend contract — native codec when importable,
-    else the pure-Python stored-frame tier (brotli uncompressed
-    metablocks RFC 7932 §9.2; zstd raw/RLE blocks + skippable frames
-    RFC 8878), else honest ``body_decoded=false`` raw routing.  The
+    pyarrow native brotli; pure RFC 8878 zstd; a stream neither
+    decodes keeps its raw bytes with ``body_decoded=false``.  The
     fixture rotates brotli-stored / zstd-raw / zstd-RLE / skippable /
     chunked-wrapping-zstd / brotli+latin-1 / mislabeled-block-zstd
     (false) / compressed-brotli (false) / LF-framed-chunked-gzip (the
     r14 lenient-framing fix) / chained gzip,br / REAL compressed-block
     zstd / REAL level-19 multi-section zstd (both decoded by the pure
-    RFC 8878 FSE+Huffman tier, round 16) / REAL q11 brotli and the
-    twin's LZ metablocks (the round-17 pure RFC 7932 tier: static
-    dictionary + transforms + context modeling) per doc_id %% 14;
-    %% 11 plants a truncated zstd frame.  All map-side, zero shuffles."""
+    RFC 8878 FSE+Huffman tier) / REAL q11 brotli (static dictionary
+    + transforms + context modeling) and LZ-mode brotli metablocks
+    per doc_id %% 14; %% 11 plants a truncated zstd frame.  All
+    map-side, zero shuffles."""
     from ..operators import web
     from ..sources import warc as warcmod
 

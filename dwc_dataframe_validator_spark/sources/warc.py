@@ -33,30 +33,13 @@ import io
 import zlib
 from typing import Iterator
 
-# Optional native codecs for the br/zstd Content-Encoding tier —
-# same optional-backend contract as PIL in operators/multimodal.py:
-# decode with the library when importable, else the pure-Python
-# tier below, else the honest ``body_decoded=false`` routing.  Never
-# a hard dependency.  Since round 16 the pure zstd tier decodes the
-# FULL non-dictionary format (FSE/Huffman compressed blocks, CLI-
-# validated); since round 17 the pure brotli tier decodes the FULL
-# RFC 7932 format (functions/brotli.py — context modeling, block
-# switching, static dictionary + the 121 transforms, all validated
-# against the canonical codec via Node's zlib).  The remaining
-# library-only surface is dictionary-zstd frames.
-try:  # pragma: no cover - environment-dependent
-    import brotli as _brotli_mod
-except ImportError:  # pragma: no cover
-    try:
-        import brotlicffi as _brotli_mod
-    except ImportError:
-        _brotli_mod = None
-try:  # pragma: no cover - environment-dependent
-    import zstandard as _zstd_mod
-except ImportError:  # pragma: no cover
-    _zstd_mod = None
-
 import pandas as pd
+# The br/zstd Content-Encoding tier has one decoder per codec:
+# pyarrow's native brotli codec (a hard dependency already) for br,
+# and the pure-Python RFC 8878 decoder below for zstd (FSE/Huffman
+# compressed blocks and dictionary frames, CLI-validated).  A stream
+# neither decodes keeps its raw bytes with ``body_decoded=false``.
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -618,9 +601,8 @@ def _inflate_capped(body: bytes, wbits: int):
 def _decompress_body(body: bytes, label: bytes):
     """Reverse ``Content-Encoding``: gzip/x-gzip (member format),
     deflate (zlib-wrapped per the RFC, with the raw-DEFLATE fallback
-    real servers are infamous for), and br/zstd behind the optional-
-    backend contract (library when importable, else the pure-Python
-    stored-frame tier — see ``_brotli_decode``/``_zstd_decode``).
+    real servers are infamous for), br (pyarrow native brotli) and
+    zstd (pure RFC 8878) — see ``_brotli_decode``/``_zstd_decode``.
     A comma-separated CHAIN (``Content-Encoding: gzip, br`` — RFC
     9110 §8.4: codings applied in list order) is reversed
     last-to-first, each hop under the same ``_MAX_BODY`` cap.
@@ -652,99 +634,12 @@ def _decompress_one(body: bytes, label: bytes):
     return None
 
 
-class _BitReader:
-    """LSB-first bit reader over bytes (the brotli bit order,
-    RFC 7932 §2)."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        for i in range(n):
-            if self.pos >= len(self.data):
-                raise EOFError
-            out |= ((self.data[self.pos] >> self.bit) & 1) << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return out
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-def _brotli_decode_pure(body: bytes):
-    """Pure-Python brotli tier: STORED-MODE streams only — a window
-    header followed by uncompressed metablocks (ISUNCOMPRESSED=1,
-    RFC 7932 §9.2) and metadata skips, ending in an empty last
-    metablock.  This is the framing real encoders emit for
-    incompressible payloads; general compressed metablocks need the
-    full RFC 7932 machinery including the 120 KB static dictionary,
-    which stays behind the optional ``brotli`` library — such
-    streams return None here (the honest ``body_decoded=false``
-    routing).  Output is capped at ``_MAX_BODY`` before any copy."""
-    br = _BitReader(body)
-    out = bytearray()
-    try:
-        # WBITS variable-length code (RFC 7932 §9.1)
-        if br.read(1):
-            n = br.read(3)
-            if n == 0:
-                m = br.read(3)
-                if m == 1:  # reserved pattern
-                    return None
-                # m == 0 -> WBITS 17, else WBITS 8 + m (10..15);
-                # window size only bounds back-references, which
-                # stored mode never makes — parse and ignore
-        while True:
-            islast = br.read(1)
-            if islast and br.read(1):  # ISLASTEMPTY
-                break
-            mnib_code = br.read(2)
-            if mnib_code == 3:  # MNIBBLES=0: metadata meta-block
-                if islast or br.read(1):  # reserved bit must be 0
-                    return None
-                skip_bytes = br.read(2)
-                skip_len = 0
-                if skip_bytes:
-                    skip_len = br.read(8 * skip_bytes) + 1
-                br.align()
-                if br.pos + skip_len > len(body):
-                    return None
-                br.pos += skip_len
-                continue
-            mlen = br.read(4 * (4 + mnib_code)) + 1
-            if islast:
-                return None  # last block with data is compressed
-            if not br.read(1):  # ISUNCOMPRESSED == 0
-                return None  # compressed meta-block: library tier
-            if len(out) + mlen > _MAX_BODY:
-                return None
-            br.align()
-            if br.pos + mlen > len(body):
-                return None
-            out += body[br.pos:br.pos + mlen]
-            br.pos += mlen
-    except EOFError:
-        return None
-    return bytes(out)
-
-
 def brotli_store(raw: bytes) -> bytes:
     """STORED-mode brotli framing (RFC 7932: WBITS=16 header, then
     one uncompressed metablock per ≤64 KiB chunk, then the empty
     last metablock) — a valid stream any conformant brotli decoder
-    accepts, used for the Content-Encoding fixtures so the oracle
-    runs without the native codec.  The inverse of
-    ``_brotli_decode_pure``."""
+    accepts, used to frame the Content-Encoding fixtures; pyarrow's
+    native brotli decodes it back byte-identically."""
     bits = bytearray()
     nbit = 0
 
@@ -781,35 +676,25 @@ def brotli_store(raw: bytes) -> bytes:
 
 
 def _brotli_decode(body: bytes):
-    """br Content-Encoding: native ``brotli``/``brotlicffi`` when
-    importable (fed in 64 KiB slices so the ``_MAX_BODY`` cap is
-    checked before a bomb fully materializes), else the FULL
-    pure-Python RFC 7932 decoder (functions/brotli.py) with the
-    same output cap, with the zero-dependency stored-mode walker as
-    the last resort.  None = keep raw bytes, ``body_decoded``
-    false."""
-    if _brotli_mod is not None:  # pragma: no cover - optional codec
-        try:
-            d = _brotli_mod.Decompressor()
-            out = bytearray()
-            for i in range(0, len(body), 1 << 16):
-                out += d.process(bytes(body[i:i + (1 << 16)]))
+    """br Content-Encoding through pyarrow's native brotli codec,
+    read in 64 KiB chunks so the ``_MAX_BODY`` cap stops a bomb
+    before it materializes.  None = keep raw bytes, ``body_decoded``
+    false: corrupt, truncated or over-cap streams, and an empty body
+    (no brotli stream is zero bytes long)."""
+    if not body:
+        return None
+    out = bytearray()
+    try:
+        with pa.CompressedInputStream(
+            pa.BufferReader(body), "brotli"
+        ) as stream:
+            while chunk := stream.read(1 << 16):
+                out += chunk
                 if len(out) > _MAX_BODY:
                     return None
-            if hasattr(d, "is_finished") and not d.is_finished():
-                return None
-            return bytes(out)
-        except Exception:
-            return None
-    try:
-        from ..functions.brotli import _BrotliError, decompress
-
-        try:
-            return decompress(bytes(body), max_out=_MAX_BODY)
-        except _BrotliError:
-            return None
-    except Exception:  # data tables missing: stored-mode only
-        return _brotli_decode_pure(body)
+    except OSError:
+        return None
+    return bytes(out)
 
 
 _ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
@@ -1532,21 +1417,8 @@ def zstd_frame_rle(byte: int, count: int) -> bytes:
 
 
 def _zstd_decode(body: bytes):
-    """zstd Content-Encoding: native ``zstandard`` when importable
-    (streamed read with the ``_MAX_BODY`` cap), else the pure
-    raw/RLE-frame tier.  None = keep raw bytes, ``body_decoded``
-    false."""
-    if _zstd_mod is not None:  # pragma: no cover - optional codec
-        try:
-            reader = _zstd_mod.ZstdDecompressor().stream_reader(
-                io.BytesIO(body)
-            )
-            out = reader.read(_MAX_BODY + 1)
-            if len(out) > _MAX_BODY:
-                return None
-            return out
-        except Exception:
-            return None
+    """zstd Content-Encoding through the pure RFC 8878 tier.  None =
+    keep raw bytes, ``body_decoded`` false."""
     return _zstd_decode_pure(body)
 
 
@@ -1557,9 +1429,9 @@ def decode_http_body(payload: bytes):
     wire), then ``Content-Encoding`` decompression.  Returns
     ``(head, body, content_encoding, chunked, body_decoded)`` —
     ``body_decoded`` False when a declared encoding could not be
-    reversed (corrupt stream, unsupported codec like br/zstd, broken
-    chunk framing); the RAW bytes are kept so downstream stages can
-    still count/route the row instead of dropping it."""
+    reversed (corrupt or truncated br/zstd stream, unknown codec,
+    broken chunk framing); the RAW bytes are kept so downstream
+    stages can still count/route the row instead of dropping it."""
     head_end, sep = _find_head_end(payload)
     if head_end >= 0 and payload[:5] in (b"HTTP/", b"http/"):
         head = payload[:head_end]
@@ -1883,11 +1755,19 @@ _BR_FIXTURE_12 = (
     "882082082288f48e65bf110f"
 )
 
+#: LZ-mode brotli of the class-13 page (compressed metablocks,
+#: pinned bytes)
+_BR_FIXTURE_13 = (
+    "8b29000000c8b5753afd3af043ac639d6e87d79f7cd06de80cdfe9743ac14e27"
+    "7c2ec2104b295d5870cffb12ee5a9b3071d9bd0de190ad2b8e7ace1f6e78fc4b"
+    "8579c1b2e2cd3ab4c143ad30853075e838"
+)
+
 
 @_builder_memo(lambda d: (d % 14, d % 11 == 0))
 def build_content_encoding_blob(doc_id: int) -> bytes:
     """HTTP-response bytes for the br/zstd Content-Encoding fixtures:
-    class ``doc_id %% 10`` — 0 brotli stored-mode, 1 zstd raw-block
+    class ``doc_id %% 14`` — 0 brotli stored-mode, 1 zstd raw-block
     frame, 2 zstd RLE frame + raw frame (multi-frame concatenation),
     3 zstd skippable frame then a raw frame, 4 chunked wrapping zstd
     (the real-wire layering order), 5 brotli stored + a latin-1
@@ -1895,7 +1775,7 @@ def build_content_encoding_blob(doc_id: int) -> bytes:
     6 a STORE frame mislabeled Compressed_Block (the raw HTML bytes
     are not a valid entropy section — the real decoder flags it
     corrupt, ``body_decoded=false``), 7 a ``br`` label over junk
-    bytes (the brotli library tier), 8 an LF-only head with
+    bytes (pyarrow's brotli refuses it), 8 an LF-only head with
     LF-framed chunked gzip (the lenient framing the r13 ADVICE found
     silently mis-handled), 9 a CHAINED ``Content-Encoding: gzip,
     br`` (RFC 9110 §8.4 list order: gzip applied first, so the wire
@@ -1906,9 +1786,9 @@ def build_content_encoding_blob(doc_id: int) -> bytes:
     frame (4-stream Huffman literals, FSE-described tables, repeat
     offsets) over a 20 KB page, 12 a REAL q11 brotli stream
     (reference-codec-produced, pinned bytes — static dictionary,
-    transforms and context modeling through the round-17 pure RFC
-    7932 tier), 13 the brotli encoder twin's LZ mode over the class
-    page (self-produced compressed metablocks, same pure tier).
+    transforms and context modeling), 13 an LZ-mode brotli stream
+    of the class page (pinned bytes — compressed metablocks); both
+    decode through pyarrow's native brotli.
     ``doc_id %% 11 == 0`` plants a TRUNCATED zstd frame instead."""
     cls = doc_id % 14
     text = "The café on route no. %d stayed open." % cls
@@ -1965,9 +1845,7 @@ def build_content_encoding_blob(doc_id: int) -> bytes:
         body = bytes.fromhex(_BR_FIXTURE_12)
         headers.append(("Content-Encoding", "br"))
     elif cls == 13:
-        from ..functions.brotli import compress as _br_compress
-
-        body = _br_compress(raw, "lz")
+        body = bytes.fromhex(_BR_FIXTURE_13)
         headers.append(("Content-Encoding", "br"))
     else:
         body = brotli_store(gzip.compress(raw, mtime=0))

@@ -146,6 +146,42 @@ def test_date_breakdowns_single_job(spark):
     assert sum(day_bd.values()) == 20
 
 
+def test_breakdowns_skip_overwritten_raw_histograms(spark):
+    """With eventDate present, the raw year/month/day histograms it
+    overwrites launch no job: the breakdowns cost the one date job plus
+    one per top-values field, and the report (key order included)
+    equals the compute-then-overwrite form."""
+    from dwc_dataframe_validator_spark.operators.breakdown import (
+        generate_event_date_breakdown,
+        top_values_breakdown,
+    )
+
+    df = spark.createDataFrame(
+        [("1999", "7", "3", "2023-01-0%d" % (i % 9 + 1), "Aus bus",
+          "Aidae") for i in range(20)],
+        ["year", "month", "day", "eventDate", "scientificName", "family"],
+    )
+    sc = spark.sparkContext
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("bd-overwrite-probe", "breakdown")
+        bd = generate_breakdowns(df)
+        job_ids = sc.statusTracker().getJobIdsForGroup("bd-overwrite-probe")
+        assert len(job_ids) == 3, f"expected 3 jobs, saw {len(job_ids)}"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        sc.setJobGroup("", "")
+    year_bd, month_bd, day_bd = generate_event_date_breakdown(df)
+    assert list(bd) == ["year", "month", "day", "scientificName", "family"]
+    assert bd == {
+        "year": year_bd, "month": month_bd, "day": day_bd,
+        "scientificName": top_values_breakdown(df, "scientificName", 20),
+        "family": top_values_breakdown(df, "family", 20),
+    }
+    assert bd["year"] == {2023: 20}
+
+
 def test_bad_strings_ansi_safe(spark):
     """ANSI mode is on in Spark 4 — lenient coercions must not raise."""
     df = spark.createDataFrame(

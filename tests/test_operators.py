@@ -6008,6 +6008,16 @@ def test_decompress_bomb_rejected_by_streaming_cap():
             3, "little"
         ) + b"z"
     assert w._zstd_decode(bytes(frame)) is None
+    # a ~405-byte brotli bomb (256 MiB of zeros) stops at the cap fast
+    import time as _time
+
+    import pyarrow as _pa
+
+    bomb = _pa.compress(b"\0" * (4 * w._MAX_BODY), codec="brotli",
+                        asbytes=True)
+    t0 = _time.perf_counter()
+    assert w._decompress_body(bomb, b"br") is None
+    assert _time.perf_counter() - t0 < 5
     # under-cap streams still decode through the same path
     ok = _gzip.compress(b"fine" * 100, mtime=0)
     assert w._decompress_body(ok, b"gzip") == b"fine" * 100

@@ -92,6 +92,29 @@ def test_byte_budget_resets_cache():
     assert all(c in payloads for c in calls)
 
 
+def test_oversize_value_is_not_cached():
+    """A value larger than the whole byte budget is returned uncached,
+    so it cannot clear the small entries cached before it."""
+    calls = []
+    huge = "y" * 8192  # ~16 KB retained, over the 10 KB budget
+
+    def decode(b: bytes):
+        calls.append(bytes(b))
+        return huge if b == b"huge" else b.decode()
+
+    memo = payload_memo(decode, maxsize=1024, max_bytes=10 * 1024)
+    small = [b"a", b"b", b"c"]
+    for p in small:
+        assert memo(p) == p.decode()
+    assert memo(b"huge") == huge
+    assert memo(b"huge") == huge
+    assert calls == small + [b"huge", b"huge"]  # oversize: not cached
+    assert memo(b"d") == "d"  # a later miss keeps the earlier entries
+    for p in small:
+        assert memo(p) == p.decode()
+    assert calls == small + [b"huge", b"huge", b"d"]
+
+
 def test_approx_bytes_counts_nested_tails():
     flat = _approx_bytes((b"abcd", "ef", 7, None))
     assert flat > len(b"abcd") + 2 * len("ef")

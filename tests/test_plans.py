@@ -238,6 +238,46 @@ def test_spread_small_scan_is_noop_on_wide_input(spark):
     assert spread.rdd.getNumPartitions() == par
 
 
+def test_split_count_memo_exact_key_and_bound(spark, tmp_path):
+    """The split-count memo keys on the scan's file tuple itself plus
+    the parallelism and both file-split settings, so a session whose
+    split settings change re-probes instead of reading a stale count;
+    it clears once it holds its maximum number of entries."""
+    from dwc_dataframe_validator_spark.operators import text as T
+
+    path = str(tmp_path / "scan")
+    spark.range(0, 4000, 1, 1).selectExpr(
+        "id AS doc_id", "repeat('x', 200) AS text"
+    ).write.parquet(path)
+    saved = dict(T._SPLIT_COUNT_MEMO)
+    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        T._SPLIT_COUNT_MEMO.clear()
+        df = spark.read.parquet(path)
+        files = tuple(df.inputFiles())
+        T.spread_small_scan(df, "doc_id")
+        (key,) = T._SPLIT_COUNT_MEMO
+        assert key[:2] == (files, spark.sparkContext.defaultParallelism)
+        assert T._SPLIT_COUNT_MEMO[key] == 1
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        df = spark.read.parquet(path)
+        T.spread_small_scan(df, "doc_id")
+        assert len(T._SPLIT_COUNT_MEMO) == 2  # new settings, new probe
+        (key2,) = set(T._SPLIT_COUNT_MEMO) - {key}
+        assert T._SPLIT_COUNT_MEMO[key2] == df.rdd.getNumPartitions() > 1
+
+        T._SPLIT_COUNT_MEMO.clear()
+        T._SPLIT_COUNT_MEMO.update(
+            {("f%d" % i,): 1 for i in range(T._SPLIT_COUNT_MEMO_MAX)}
+        )
+        T.spread_small_scan(df, "doc_id")
+        assert list(T._SPLIT_COUNT_MEMO) == [key2]  # cleared, then stored
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
+        T._SPLIT_COUNT_MEMO.clear()
+        T._SPLIT_COUNT_MEMO.update(saved)
+
+
 def test_incremental_dedup_screen_plan_shape(spark):
     """incremental_dedup's bloom path must plan as: checkpointed
     keepers → map-side bloom filters (no Exchange above them) → the

@@ -7,10 +7,9 @@ Expected shapes:
   regex ODF content extraction per row, no shuffle: ~linear.
 - ``mbox_text_check`` — envelope split + stdlib ``email`` parse per
   message (1-3 per row), map-side: ~linear.
-- ``http_content_encoding_check`` — wire decode per row; classes 12
-  (real q11 brotli: pure RFC 7932 decode of a 5.6 KB page — the
-  Python-entropy constant) and 13 (the twin's LZ metablocks)
-  dominate; still one map-side projection: ~linear.
+- ``http_content_encoding_check`` — wire decode per row (classes 12
+  and 13 through pyarrow's native brotli, classes 10/11 through the
+  pure RFC 8878 zstd tier); one map-side projection: ~linear.
 - ``pdf_encrypted_text_check`` — re-profiled after the AES-256
   classes (two of seven schemes now run Algorithm 2.B ×2 plus
   AES-256-CBC streams through the accelerated seam): ~linear.
