@@ -101,12 +101,6 @@ def exact_dedup_keepers_by_priority(
     )
 
 
-def dedup_any_survivor(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """``dropDuplicates(keys)`` — nondeterministic survivor, but cheaper
-    at scale: partial (map-side) dedup runs before the shuffle."""
-    return df.dropDuplicates(list(keys))
-
-
 def duplicate_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Offender listing: key groups occurring more than once, with
     counts.  groupBy → filter; output cardinality = |dup groups|."""

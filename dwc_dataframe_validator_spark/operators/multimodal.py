@@ -4952,10 +4952,14 @@ def _jpeg_decode_inner(b: bytes, np, ctx):
                 comps.append((cid, hv >> 4, hv & 0xF, tq))
             if h == 0 or w == 0 or h * w > 16_000_000:
                 return None
+            # ITU T.81 B.2.2: every H and V is 1..4 (a 0 would divide
+            # by zero at upsampling)
+            if not comps or any(
+                not (1 <= c[1] <= 4 and 1 <= c[2] <= 4) for c in comps
+            ):
+                return None
             hmax = max(c[1] for c in comps)
             vmax = max(c[2] for c in comps)
-            if hmax == 0 or vmax == 0:
-                return None
             mcux = (w + 8 * hmax - 1) // (8 * hmax)
             mcuy = (h + 8 * vmax - 1) // (8 * vmax)
             sof = (h, w, comps)

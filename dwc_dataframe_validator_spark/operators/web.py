@@ -695,6 +695,25 @@ def html_paragraphs(html: Column) -> Column:
     return F.split(t, _PARA_SEP)
 
 
+#: columns ``justext_paragraphs`` makes (internal ones included) and
+#: the ones ``wet_main_content`` adds on top: a ``carry`` column of the
+#: same name would be shadowed or made ambiguous
+_JUSTEXT_COLS = (
+    "_pi", "_chunk", "para_text", "n_links", "n_chars", "n_words",
+    "n_stop", "cf_class", "para_pos", "_c2", "final_class",
+)
+_WET_COLS = (
+    "n_paras_total", "n_paras_good", "_mt", "main_text", "n_chars_main",
+)
+
+
+def _check_carry(carry: tuple, id_col: str, reserved: tuple) -> None:
+    clash = sorted({c for c in carry if c == id_col or c in reserved})
+    if clash:
+        raise ValueError(f"carry column(s) {clash} collide with {id_col!r} "
+                         "or a column this function makes")
+
+
 def justext_paragraphs(
     df: DataFrame,
     payload_col: str = "payload_text",
@@ -743,7 +762,11 @@ def justext_paragraphs(
          the exact fixpoint.
 
     Both steps ride ONE exchange+sort (every window shares the
-    doc-id partitioning and paragraph order)."""
+    doc-id partitioning and paragraph order).
+
+    Raises ``ValueError`` when a ``carry`` name is ``id_col`` or one
+    of this function's internal or output columns."""
+    _check_carry(carry, id_col, _JUSTEXT_COLS)
     p = F.col(payload_col)
     status = http_status(p)
     ctype = http_header(p, "content-type")
@@ -870,7 +893,10 @@ def wet_main_content(
     ``carry`` columns (document-level, functionally dependent on the
     id — see ``justext_paragraphs``) become extra groupBy keys and
     output columns after ``id_col``: same groups, since each id has
-    exactly one carry tuple."""
+    exactly one carry tuple.  Raises ``ValueError`` when a ``carry``
+    name collides as in ``justext_paragraphs`` or with one of this
+    function's aggregate columns."""
+    _check_carry(carry, id_col, _WET_COLS)
     paras = justext_paragraphs(df, payload_col, id_col, carry=carry)
     good = F.col("final_class") == "good"
     agg = paras.groupBy(id_col, *carry).agg(

@@ -50,18 +50,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register every driver table as a temp view so the full surface
-    is reachable from ``spark.sql`` as well as the DataFrame API."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return list(TABLE_NAMES)
-
-
 def local_session(app: str = "dwc-validator-spark", cpus: int | None = None) -> SparkSession:
     """Session for local testing; on a real cluster, callers bring their
     own session and these configs come from spark-submit."""
@@ -77,5 +65,12 @@ def local_session(app: str = "dwc-validator-spark", cpus: int | None = None) -> 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "4g"))
+        # Static conf, so it must be set before the session exists.
+        # Generated-class working set per op: ~155 for corpus_crawl
+        # (minhash_dedup_keepers + crawl_ingest_check), 37 for
+        # dwca_validate, 24 for stream_validate.  At the default of
+        # 100 the crawl op evicts every class before it reuses it and
+        # recompiles ~152 of them with Janino on every repeat.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .getOrCreate()
     )

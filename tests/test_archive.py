@@ -17,11 +17,16 @@ from dwc_dataframe_validator_spark.sources.dwca import (
 OCC = "/root/reference/dwc_validator/test/occurrence_archives"
 EVT = "/root/reference/dwc_validator/test/event_archives"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(OCC), reason="reference fixture archives not present"
-)
+
+@pytest.fixture
+def ref_archives():
+    """Skip a test that reads the reference's fixture archives when
+    they are not present."""
+    if not os.path.isdir(OCC):
+        pytest.skip("reference fixture archives not present")
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_descriptor_parse():
     desc = read_descriptor(f"{OCC}/dwca-simple")
     assert desc.core.type_tail == "Occurrence"
@@ -33,6 +38,7 @@ def test_descriptor_parse():
     assert "occurrenceID" in names and "basisOfRecord" in names
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_archive_table_all_string(spark):
     desc = read_descriptor(f"{OCC}/dwca-simple")
     df = read_archive_table(spark, desc, desc.core)
@@ -40,6 +46,7 @@ def test_archive_table_all_string(spark):
     assert df.count() == 5
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_get_id_dwc_term():
     desc = read_descriptor(f"{OCC}/dwca-simple")
     # fixture declares <id index=0/> with no <field index=0> — no term
@@ -49,6 +56,7 @@ def test_get_id_dwc_term():
 
 # --- ports of test_occurrence_archive.py ----------------------------------
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_ok(spark):
     rep = validate_archive(spark, f"{OCC}/dwca-simple", ["occurrenceID"])
     assert rep.core.record_count == 5
@@ -61,6 +69,7 @@ def test_validate_ok(spark):
     assert rep.dataset_type == "Occurrence"
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_bad_coordinates(spark):
     rep = validate_archive(spark, f"{OCC}/dwca-bad-coordinates", ["occurrenceID"])
     assert rep.core.record_count == 5
@@ -69,6 +78,7 @@ def test_validate_bad_coordinates(spark):
     assert "INVALID_OR_OUT_OF_RANGE_COORDINATES" in rep.core.warnings
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_out_of_range_coordinates(spark):
     rep = validate_archive(spark, f"{OCC}/dwca-out-of-range-coordinates", ["occurrenceID"])
     assert rep.core.record_count == 5
@@ -76,6 +86,7 @@ def test_validate_out_of_range_coordinates(spark):
     assert rep.core.coordinates_report.invalid_decimal_longitude_count == 1
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_geodetic_datum(spark):
     rep = validate_archive(spark, f"{OCC}/dwca-bad-geodetic-datum", ["occurrenceID"])
     assert rep.core.record_count == 5
@@ -87,6 +98,7 @@ def test_validate_geodetic_datum(spark):
     assert gd.unrecognised_count == 1
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_unrecognised_basis_of_record(spark):
     rep = validate_archive(
         spark, f"{OCC}/dwca-unrecognised-basis-of-record", ["occurrenceID"]
@@ -103,6 +115,7 @@ def test_validate_unrecognised_basis_of_record(spark):
 
 # --- port of test_event_archive.py ----------------------------------------
 
+@pytest.mark.usefixtures("ref_archives")
 def test_validate_event_ok(spark):
     rep = validate_archive(spark, f"{EVT}/dwca-simple")
     assert rep.core.record_count == 5
@@ -118,6 +131,7 @@ def test_validate_event_ok(spark):
     assert "year" in rep.breakdowns and "month" in rep.breakdowns
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_register_archive_views(spark):
     from dwc_dataframe_validator_spark.sources.dwca import register_archive_views
 
@@ -131,6 +145,7 @@ def test_register_archive_views(spark):
     assert joined > 0
 
 
+@pytest.mark.usefixtures("ref_archives")
 def test_zip_archive(spark, tmp_path):
     import shutil
 

@@ -5145,6 +5145,51 @@ def test_jpeg_baseline_codec_roundtrip(spark):
     assert not got[13]["ok"] and not got[17]["ok"]
 
 
+#: ``build_jpeg_blob(10)`` with three bytes overwritten; one lands in
+#: the SOF0 sampling byte of component 3 (0x11 → 0x10: H=1, V=0)
+_JPEG_V0_MUTANT = bytes.fromhex(
+    "ffd8ffdb004300100b0c0e0c0a100e0d0e1211101318281a181616183123251d"
+    "283a333d3c9233383740485c4e404457453738506d51575f626768673e4d7179"
+    "7064785c656763ffdb0043011112121815182f1a1a2f63423842636363636363"
+    "6363636363636363636363636363636363636363636363636363636363636363"
+    "636363636363636363636363ffc00011080010001003011100021101031001ff"
+    "c4001f0000010501010101010100000000000000000102030405060708090a0b"
+    "ffc400b5100002010303020403050504040000017d0102030004110512213141"
+    "0613516107227114328191a1082342b1c11552d1f02433627282090a16171819"
+    "1a25262728292a3435363738393a434445464748494a535455565758595a6364"
+    "65666768696a737475767778797a838485868788898a92939495969798999aa2"
+    "a3a4a5a6a7a8a9aab2b3b4b5b6b7b8b9bac2c3c4c5c6c7c8c9cad2d3d4d5d6d7"
+    "d8d9dae1e2e3e4e5e6e7e8e9eaf1f2f3f4f5f6f7f8f9faffc4001f0100030101"
+    "010101010101010000000000000102030405060708090a0bffc400b511000201"
+    "0204040304070504040001027700010203110405213106124151076171132232"
+    "8108144291a1b1c109233352f0156272d10a162434e125f11718191a26272829"
+    "2a35323738393a434445464748494a535455565758595a636465666768696a73"
+    "7475767778797a82838485868788898a92939495969798999aa2a3a4a5a6a7a8"
+    "a9aab2b3b4b5b6b7b8b9bac2c3c4c5c6c7c8c9cad2d3d4d5d6d7d8d9dae2e3e4"
+    "e5e6e7e8e9eaf2f3f4f5f6f7f8f9faffda000c03010002110311003f00e734fb"
+    "5e9c56b570e45581d3e9f6bd38af32ae1cf36ac0cdb051c6109fad7af88cc60b"
+    "e0837eba7f99f4352833a7d3d7a7eeff005af22ae65ff4eff1ff008079d5681f"
+    "ffd9"
+)
+
+
+def test_jpeg_zero_sampling_factor_is_rejected():
+    """A SOF component with sampling factor 0 used to raise
+    ZeroDivisionError at upsampling, which the decoder's error net
+    does not catch, so one such image failed the whole query.
+    T.81 B.2.2 allows only 1..4: the frame is refused (None)."""
+    from dwc_dataframe_validator_spark.operators import multimodal as mm
+
+    assert mm.jpeg_decode_pixels(_JPEG_V0_MUTANT) is None
+    base = mm.build_jpeg_blob(10)
+    sof = base.index(b"\xff\xc0")
+    for i, hv in ((11, 0x01), (14, 0x51), (17, 0x15), (11, 0x00)):
+        bad = bytearray(base)
+        bad[sof + i] = hv
+        assert mm.jpeg_decode_pixels(bytes(bad)) is None, (i, hex(hv))
+    assert mm.jpeg_decode_pixels(base) is not None
+
+
 def test_jpeg_progressive_codec_parity(spark):
     """r13: progressive JPEG (SOF2 spectral selection + successive
     approximation) and restart intervals — every wrapper mode carries

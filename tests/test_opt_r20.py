@@ -222,3 +222,35 @@ def test_wet_main_content_carry_rides_unchanged(spark):
         assert r["url"] == urls[i]
         assert (r["main_text"], r["n_paras_total"], r["n_paras_good"],
                 r["n_chars_main"]) == plain[i]
+
+
+def _carry_frame(spark):
+    return spark.createDataFrame(
+        [(1, "http://a.example/x", "HTTP/1.1 200 OK\r\n\r\n<p>x</p>")],
+        "doc_id long, url string, payload_text string",
+    )
+
+
+def test_justext_paragraphs_rejects_colliding_carry(spark):
+    """A carry column named like the id or a column justext_paragraphs
+    makes would be shadowed or ambiguous: refused up front."""
+    import pytest
+
+    from dwc_dataframe_validator_spark.operators import web
+
+    df = _carry_frame(spark)
+    for name in ("doc_id", "para_text", "final_class", "_pi"):
+        with pytest.raises(ValueError, match=name):
+            web.justext_paragraphs(df, carry=("url", name))
+    assert "url" in web.justext_paragraphs(df, carry=("url",)).columns
+
+
+def test_wet_main_content_rejects_colliding_carry(spark):
+    import pytest
+
+    from dwc_dataframe_validator_spark.operators import web
+
+    df = _carry_frame(spark)
+    for name in ("doc_id", "main_text", "n_paras_good", "_mt", "cf_class"):
+        with pytest.raises(ValueError, match=name):
+            web.wet_main_content(df, carry=(name,))
