@@ -291,7 +291,6 @@ def save_fingerprint_index(
     mode: str = "overwrite",
     k: int | None = None,
     m: int | None = None,
-    decode_backend: str | None = None,
 ) -> None:
     """Persist the dedup artifact: the fingerprint store partitioned
     by ``fp_bucket``, the bloom set-bit positions, and the geometry
@@ -301,25 +300,11 @@ def save_fingerprint_index(
     per-bucket files and new bloom positions are appended (bloom union
     = OR, so append + distinct-on-load is exact).  Appends take their
     geometry FROM the meta; passing k/m that disagree raises instead
-    of appending positions the existing filter cannot contain.
-
-    ``decode_backend`` records which PIXEL DECODE produced the
-    fingerprints (image stores only): perceptual hashes from
-    different JPEG codecs differ for identical bytes, so mixing a
-    'pure'-built store with 'pil'-hashed batches silently breaks
-    exact-hash dedup.  Appends that pass a value disagreeing with the
-    recorded one raise (same contract as k/m); indexes saved before
-    this field existed adopt the first value an append declares."""
+    of appending positions the existing filter cannot contain."""
     spark = store.sparkSession
     if mode == "append":
         meta = read_index_meta(spark, path)
         _check_geometry(meta, path, k=k, m=m)
-        if decode_backend is not None:
-            if "decode_backend" in meta:
-                _check_geometry(meta, path, decode_backend=decode_backend)
-            else:  # pre-field index: adopt and record
-                meta = {**meta, "decode_backend": decode_backend}
-                write_index_meta(spark, path, meta)
         k, m = meta["k"], meta["m"]
         _heal_tree(spark, path, "fingerprints")
         _heal_tree(spark, path, _bloom_tree(meta))
@@ -334,8 +319,6 @@ def save_fingerprint_index(
             "m": m,
             "bloom_gen": 0,
         }
-        if decode_backend is not None:
-            meta["decode_backend"] = decode_backend
     store.write.partitionBy("fp_bucket").mode(mode).parquet(
         f"{path}/fingerprints"
     )

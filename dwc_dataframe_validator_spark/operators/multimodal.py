@@ -2,14 +2,14 @@
 columns with typed metadata.
 
 The Spark-side contract is real and tested — binary content column,
-metadata struct, Arrow-batched ``mapInPandas`` decode/feature plumbing
-with explicit output schemas.  ``decode_images`` uses PIL when it is
-importable (guarded import — no hard dependency); without PIL it
-raises ``NotImplementedError`` unless ``fake=True``, in which case a
-deterministic fake decoder derives dimensions from the bytes (stable
-for tests).  Video frame sampling mirrors the same pattern: imageio
-(+pyav/ffmpeg) when importable, else the deterministic byte-offset
-stub behind ``fake=True`` / ``NotImplementedError``.
+metadata struct, Arrow-batched decode/feature plumbing with explicit
+output schemas, every decoder one ``map_payloads`` call
+(``functions/payload_cache.py``: a NULL or undecodable payload is a
+flagged row, never a failed task).  Every decoder here is pure
+Python/numpy and deterministic — no codec library is imported — so
+oracle hashes never depend on the container that ran the job.
+``decode_images(fake=True)`` and ``sample_frames(fake=True)`` are
+deterministic byte-arithmetic stubs for tests.
 
 Scale notes (100 TB):
 - binary payloads ride in parquet as BYTE_ARRAY; metadata-only queries
@@ -28,7 +28,6 @@ import functools as _functools
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
 
 def _fixture_memo(key_fn):
@@ -55,9 +54,7 @@ def _fixture_memo(key_fn):
         return wrapper
     return deco
 
-from ..functions.payload_cache import payload_memo as _payload_memo
-
-import pandas as pd
+from ..functions.payload_cache import attach_blobs, map_payloads
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -105,105 +102,34 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 4
 
 
-_PIL_AVAILABLE: bool | None = None
-
-
-def _pil_available() -> bool:
-    # memoized: backend='auto' probes this per image, and a FAILED
-    # import attempt (the no-PIL container) costs far more than the
-    # sys.modules hit of a successful one — measured ~20% of pure-PNG
-    # decode throughput before caching
-    global _PIL_AVAILABLE
-    if _PIL_AVAILABLE is None:
-        try:
-            import PIL.Image  # noqa: F401
-            _PIL_AVAILABLE = True
-        except ImportError:
-            _PIL_AVAILABLE = False
-    return _PIL_AVAILABLE
-
-
-def _pil_decode(payload: bytes) -> tuple[int, int, int, bool]:
-    """Real decode path: PIL header read (``Image.open`` is lazy — it
-    parses the header only, no full pixel decode for metadata)."""
-    import io
-
-    import PIL.Image
-
-    try:
-        with PIL.Image.open(io.BytesIO(payload)) as im:
-            return im.width, im.height, len(im.getbands()), True
-    except Exception:  # noqa: BLE001 — corrupt blob → ok=False row
-        return 0, 0, 0, False
-
-
 def decode_images(
     df: DataFrame,
     content_col: str = "content",
     id_col: str = "id",
     fake: bool = False,
-    backend: str = "auto",
 ) -> DataFrame:
-    """Arrow-batched image decode returning (id, width, height,
-    channels, ok).
+    """(id, width, height, channels, ok) per image blob.
 
-    ``backend`` picks the decoder explicitly: ``"pil"`` (full decode —
-    corrupt payloads yield ``ok=False`` rows, not task failures;
-    raises ImportError up front if PIL is absent), ``"header"`` (the
-    codec-free pure-byte parser ``parse_media_header`` — real
-    dimensions for PNG/JPEG/GIF/BMP, runs in any container, but
-    validates HEADERS ONLY: a valid header over a truncated/corrupt
-    body still reads ``ok=True``), or ``"fake"`` (deterministic test
-    stub; ``fake=True`` is a back-compat alias).  Non-image payloads
-    (e.g. WAV audio) are ``ok=False`` on every backend — this is an
-    IMAGE decoder.
+    The codec-free pure-byte parser ``parse_media_header`` reads real
+    dimensions for PNG/JPEG/GIF/BMP in any container, but validates
+    HEADERS ONLY: a valid header over a truncated/corrupt body still
+    reads ``ok=True``.  Non-image payloads (e.g. WAV audio) are
+    ``ok=False`` — this is an IMAGE decoder.  ``fake=True`` swaps in
+    the deterministic test stub (dimensions from a payload digest).
+    Bad payloads follow the ``map_payloads`` failure contract."""
 
-    The default ``"auto"`` = PIL if importable else header — handy
-    interactively, but ``ok`` semantics then depend on which container
-    ran the job; pin ``backend`` explicitly in any pipeline whose
-    downstream gates key on ``ok``.  Plumbing, schema and Arrow
-    batching are identical on every branch — swapping the decoder
-    never changes the plan."""
-    if backend not in ("auto", "pil", "header", "fake"):
-        raise ValueError(f"unknown decode backend {backend!r}")
-    if fake:
-        backend = "fake"
-    elif backend == "pil" and not _pil_available():
-        raise ImportError(
-            "decode_images(backend='pil') requires PIL; install it or "
-            "pin backend='header' (header-only validation)"
-        )
-    elif backend == "auto":
-        backend = "pil" if _pil_available() else "header"
+    def header(b: bytes):
+        mime, w, h, ch, _, ok = parse_media_header(b)
+        if ok and (mime or "").startswith("image/"):
+            return ((w, h, ch, True),)
+        return ((0, 0, 0, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, False))
-                    continue
-                if backend == "pil":
-                    w, h, ch, ok = _pil_decode(bytes(payload))
-                elif backend == "fake":
-                    w, h, ch = _fake_decode(bytes(payload))
-                    ok = True
-                else:
-                    mime, w, h, ch, _, ok = parse_media_header(
-                        bytes(payload)
-                    )
-                    # header backend: only image payloads decode ok —
-                    # a parseable WAV is still not an image
-                    ok = bool(ok) and (mime or "").startswith("image/")
-                    if not ok:
-                        w, h, ch = 0, 0, 0
-                rows.append((i, w, h, ch, ok))
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "channels", "ok"]
-            )
+    def stub(b: bytes):
+        return ((*_fake_decode(b), True),)
 
-    return df.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        run, BLOB_META_SCHEMA
+    return map_payloads(
+        df, stub if fake else header, BLOB_META_SCHEMA, content_col,
+        id_col, ((0, 0, 0, False),), memo=False,
     )
 
 
@@ -447,28 +373,9 @@ def decode_media_headers(
     O(1) header scan (JPEG segment walk is bounded by the header
     segments, not the payload), and the parquet reader only
     materializes the two selected columns."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (i, *parse_media_header(None if p is None else bytes(p)))
-                for i, p in zip(pdf[id_col], pdf[content_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "mime", "width", "height", "channels",
-                    "sample_rate", "ok",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "channels": "Int32", "sample_rate": "Int32",
-                }
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, HEADER_META_SCHEMA
+    return map_payloads(
+        df, lambda b: (parse_media_header(b),), HEADER_META_SCHEMA,
+        content_col, id_col, (_BAD,), memo=False,
     )
 
 
@@ -593,83 +500,14 @@ def build_media_blob_v2(doc_id: int) -> bytes:
 
 def attach_media_blob_v2(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the round-13 container-format header blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_media_blob_v2(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_media_blob_v2, id_col)
 
 
 def attach_media_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic media bytes per id —
     the fixture generator for the codec-free decode path (production
     blobs come straight off a parquet binary column instead)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_media_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
-
-
-def _video_backend_available() -> bool:
-    """imageio v3 with any decodable plugin (pyav/ffmpeg) — guarded
-    import, mirroring ``_pil_available``."""
-    try:
-        import imageio.v3  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def _imageio_frames(
-    payload: bytes, max_frames: int
-) -> list[tuple[int, bytes]]:
-    """Real frame sampling: decode the container with imageio
-    (pyav/ffmpeg underneath), sample up to ``max_frames`` frames with
-    an even stride over the available frames, and re-encode each
-    sampled frame as PNG bytes for the binary output column.  A
-    corrupt/undecodable payload yields ZERO frames (the row-expanding
-    analogue of ``_pil_decode``'s ok=False — bad blobs never fail the
-    task)."""
-    import io
-
-    import imageio.v3 as iio
-
-    try:
-        frames = iio.imread(io.BytesIO(payload), index=None)
-    except Exception:  # noqa: BLE001 — undecodable blob → no frames
-        return []
-    if frames.ndim == 3:  # single image decodes as (h, w, c)
-        frames = frames[None, ...]
-    n_avail = frames.shape[0]
-    if n_avail == 0:
-        return []
-    n = min(max_frames, n_avail)
-    step = max(1, n_avail // n)
-    out = []
-    for k in range(n):
-        buf = io.BytesIO()
-        iio.imwrite(buf, frames[k * step], extension=".png")
-        out.append((k, buf.getvalue()))
-    return out
+    return attach_blobs(df, build_media_blob, id_col)
 
 
 def sample_frames(
@@ -679,81 +517,44 @@ def sample_frames(
     max_frames: int = 4,
     fake: bool = False,
 ) -> DataFrame:
-    """Row-expanding frame sampler (1 blob → n frames).
+    """Row-expanding frame sampler (1 blob → n frames):
+    ``(id, frame_idx, frame_bytes)``.
 
-    Backend choice mirrors ``decode_images``: ``fake=True`` forces the
-    deterministic byte-arithmetic stub (stable for tests and the exact
-    byte-offset oracle — registry ``multimodal_frame_sample_check``).
-    Otherwise MJPEG-in-AVI blobs (RIFF/AVI magic) walk the codec-free
-    real path — ``avi_mjpeg_frames``, raw per-frame JPEG bytes out,
-    corrupt containers yield zero frames; other containers use
-    imageio(+pyav/ffmpeg) when importable (sampled frames re-encoded
-    as PNG bytes), and an AVI with a non-MJPG codec falls through to
-    imageio too.  With neither path available the batch raises
-    ``NotImplementedError`` (the honest codec tier).  Plumbing, output
-    schema and Arrow batching are identical on every branch."""
-    use_video = not fake and _video_backend_available()
+    ``fake=True`` forces the deterministic byte-arithmetic stub (stable
+    for tests and the exact byte-offset oracle — registry
+    ``multimodal_frame_sample_check``).  Otherwise MJPEG-in-AVI blobs
+    (RIFF/AVI magic) walk the codec-free path — ``avi_mjpeg_frames``,
+    raw per-frame JPEG bytes out — and animated GIFs are composed
+    codec-free, sampled frames re-encoded as PNG bytes (lossless).
+    Containers whose codecs need an external decoder (MP4/WebM, an AVI
+    with a non-MJPG codec), corrupt containers and NULL blobs yield
+    zero frames (the ``map_payloads`` contract)."""
+    if max_frames < 1:
+        raise ValueError(f"max_frames must be >= 1, got {max_frames}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    # null blob → zero frames, matching the null-tolerant
-                    # semantics of the other blob operators
-                    continue
-                b = bytes(payload)
-                if fake:
-                    n = 1 + (len(b) % max_frames)
-                    step = max(1, len(b) // n)
-                    for f_idx in range(n):
-                        rows.append((i, f_idx, b[f_idx * step : f_idx * step + 16]))
-                    continue
-                if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    try:
-                        frames = avi_mjpeg_frames(b)
-                    except NotImplementedError:
-                        if not use_video:
-                            raise
-                        frames = None  # non-MJPG codec → imageio below
-                    else:
-                        if frames:
-                            n = min(max_frames, len(frames))
-                            step = max(1, len(frames) // n)
-                            rows.extend(
-                                (i, k, frames[k * step]) for k in range(n)
-                            )
-                        continue  # corrupt AVI → zero frames
-                if b[:6] in (b"GIF87a", b"GIF89a"):
-                    # animated GIF: codec-free composition; sampled
-                    # frames re-encoded as PNG bytes (lossless)
-                    gframes = gif_decode_frames(b)
-                    if gframes:
-                        n = min(max_frames, len(gframes))
-                        step = max(1, len(gframes) // n)
-                        rows.extend(
-                            (i, k, png_encode(gframes[k * step]))
-                            for k in range(n)
-                        )
-                        continue
-                    if not use_video:
-                        continue  # rejected GIF, no backend → 0 frames
-                    # a GIF the codec-free path rejects (>16 MP screen,
-                    # exotic variant) falls through to imageio below —
-                    # mirroring the AVI non-MJPG fallthrough
-                if not use_video:
-                    raise NotImplementedError(
-                        "video decoding beyond MJPEG-in-AVI requires "
-                        "imageio/pyav/ffmpeg (not installed); pass "
-                        "fake=True for the deterministic stub"
-                    )
-                rows.extend(
-                    (i, f_idx, fb) for f_idx, fb in _imageio_frames(b, max_frames)
-                )
-            yield pd.DataFrame(rows, columns=["id", "frame_idx", "frame_bytes"])
+    def stub(b: bytes):
+        n = 1 + (len(b) % max_frames)
+        step = max(1, len(b) // n)
+        return tuple(
+            (k, b[k * step : k * step + 16]) for k in range(n)
+        )
 
-    return df.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        run, FRAME_SCHEMA
+    def real(b: bytes):
+        if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            frames, encode = avi_mjpeg_frames(b), bytes
+        elif b[:6] in (b"GIF87a", b"GIF89a"):
+            frames, encode = gif_decode_frames(b), png_encode
+        else:
+            return ()
+        if not frames:
+            return ()
+        n = min(max_frames, len(frames))
+        step = max(1, len(frames) // n)
+        return tuple((k, encode(frames[k * step])) for k in range(n))
+
+    return map_payloads(
+        df, stub if fake else real, FRAME_SCHEMA, content_col, id_col, (),
+        memo=False,
     )
 
 
@@ -791,10 +592,7 @@ def _png_defilter(raw: bytes, h: int, w: int, stride: int, bpp: int):
     integer loops over lists — Python int arithmetic on list elements
     is ~an order of magnitude faster than numpy scalar indexing, which
     is what the r11 decoder did and what made real-encoder output
-    (mostly Average/Paeth rows) the crawl-scale throughput ceiling.
-    When PIL is importable the whole defilter is bypassed upstream
-    (``_pil_png_pixels``); this is the deterministic no-dependency
-    fallback."""
+    (mostly Average/Paeth rows) the crawl-scale throughput ceiling."""
     import numpy as np
 
     arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
@@ -841,35 +639,6 @@ def _png_defilter(raw: bytes, h: int, w: int, stride: int, bpp: int):
     return out
 
 
-def _pil_png_pixels(b: bytes, w: int, h: int):
-    """PNG pixel plane via PIL when importable — PNG is lossless, so
-    the decoded bytes are bit-identical to ``_png_defilter``'s (pinned
-    by the backend-equivalence pytest in containers that have PIL).
-    Returns the SAME representation the pure path produces before
-    palette resolution — gray (h,w,1), gray+alpha (h,w,2), RGB/RGBA,
-    or the raw palette INDEX plane for color type 3 (palette lookup
-    and its out-of-range guard stay in ``png_decode_pixels``, one code
-    path for both backends).  ``None`` on any PIL failure or shape
-    surprise → caller falls through to the pure decoder."""
-    import io
-
-    import numpy as np
-
-    try:
-        from PIL import Image
-
-        im = Image.open(io.BytesIO(b))
-        im.load()
-    except Exception:
-        return None
-    if im.size != (w, h) or im.mode not in ("L", "LA", "RGB", "RGBA", "P"):
-        return None
-    arr = np.asarray(im, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    return arr
-
-
 def png_decode_pixels(b: bytes):
     """Full PNG pixel decode → uint8 ndarray (h, w, channels), or
     ``None`` for malformed input.  Supports bit depth 8, color types
@@ -881,11 +650,7 @@ def png_decode_pixels(b: bytes):
     ``None`` for bytes that aren't a recognized image at all or for a
     corrupt/truncated PNG.
 
-    Pixel engine: PIL when importable (lossless format → bit-identical
-    bytes, pinned by the backend-equivalence pytest), else the
-    deterministic zlib + ``_png_defilter`` path — every guard (IHDR
-    shape, depth, interlace, 16 MP bound, palette range) runs the same
-    on both."""
+    Pixel engine: the deterministic zlib + ``_png_defilter`` path."""
     import numpy as np
 
     if b[:8] != _PNG_SIG:
@@ -928,8 +693,6 @@ def png_decode_pixels(b: bytes):
         return None
     stride = w * ch
     bpp = ch  # bytes per pixel at depth 8
-    # stream-length guard runs BEFORE any backend so corrupt streams
-    # are None on every backend (the backend-equivalence contract)
     passes = []
     if interlace == 1:
         expected = 0
@@ -943,10 +706,7 @@ def png_decode_pixels(b: bytes):
         expected = h * (stride + 1)
     if len(raw) != expected:
         return None
-    px = _pil_png_pixels(b, w, h) if _pil_available() else None
-    if px is not None and px.shape != (h, w, ch):
-        px = None  # mode surprise → deterministic fallback
-    if px is None and interlace == 1:
+    if interlace == 1:
         # Adam7 (spec §8.2): seven independently-filtered passes,
         # each scattered onto its (x0::dx, y0::dy) grid
         px = np.zeros((h, w, ch), dtype=np.uint8)
@@ -960,7 +720,7 @@ def png_decode_pixels(b: bytes):
             if sub is None:
                 return None
             px[y0::dy, x0::dx] = sub.reshape(ph, pw, ch)
-    elif px is None:
+    else:
         out = _png_defilter(raw, h, w, stride, bpp)
         if out is None:
             return None
@@ -1036,89 +796,30 @@ def image_dhash(px) -> int:
     return v
 
 
-def decode_image_pixels(b: bytes, backend: str = "pure"):
-    """Pixel decode with an explicit BACKEND CONTRACT — the JPEG-tier
-    unlock behind the same integer hash grid:
-
-    - ``"pure"``: the dependency-free decoders — PNG (zlib +
-      defilter), GIF (hand-rolled LZW), BMP (BI_RGB rows) and
-      JPEG (baseline AND progressive, with restart intervals) all
-      decode for REAL; arithmetic/hierarchical/lossless JPEG, RLE
-      BMP and 16-bit variants raise ``NotImplementedError`` (the
-      remaining documented stubs).
-      This is the DEFAULT and what the registry oracle runs, so the
-      driver's value hash never depends on which container decoded.
-    - ``"pil"``: PNG still routes through ``png_decode_pixels`` (same
-      guards, bit-identical pixels — lossless); OTHER image formats
-      decode through PIL (palette/exotic modes converted to RGB,
-      16 MP bound applied before pixel access).  Raises ImportError
-      without PIL.  JPEG pixels are only as deterministic as the
-      installed codec — fine for hashing real corpora, wrong for a
-      cross-engine oracle, hence never the default.
-    - ``"auto"``: pil if importable else pure — interactive
-      convenience; pin explicitly in pipelines (same caveat as
-      ``decode_images``).
+def decode_image_pixels(b: bytes):
+    """Pixel decode through the dependency-free decoders — PNG (zlib
+    + defilter), GIF (hand-rolled LZW), BMP, TIFF (strip none/LZW/
+    PackBits), ICO/CUR and JPEG (baseline AND progressive, with
+    restart intervals) all decode for REAL; arithmetic/hierarchical/
+    lossless JPEG and the other documented stub tiers raise
+    ``NotImplementedError``.  Deterministic by construction, so
+    oracle hashes never depend on which container decoded.
 
     Returns uint8 ndarray (h, w, channels) or ``None`` for
     undecodable/non-image bytes."""
-    if backend not in ("auto", "pil", "pure"):
-        raise ValueError(f"unknown pixel backend {backend!r}")
-    if backend == "auto":
-        backend = "pil" if _pil_available() else "pure"
-    if backend == "pure" and b[:6] in (b"GIF87a", b"GIF89a"):
-        # GIF is LZW dictionary coding — codec-free on the pure path;
-        # under 'pil' the PIL codec takes it so exotic variants the
-        # pure tier stubs (e.g. unusual extensions) still decode
+    if b[:6] in (b"GIF87a", b"GIF89a"):
         return gif_decode_pixels(b)
-    if backend == "pure" and b[:2] == b"BM":
-        # uncompressed DIB rows on the pure path; 'pil' falls through
-        # so RLE8/bitfields BMPs decode via PIL per the contract above
+    if b[:2] == b"BM":
         return bmp_decode_pixels(b)
-    if backend == "pure" and b[:4] in (b"II*\x00", b"MM\x00*"):
-        # strip TIFF (none/LZW/PackBits) decodes for real on the pure
-        # path; CCITT/JPEG-in-TIFF/tiled/planar raise the honest stub
+    if b[:4] in (b"II*\x00", b"MM\x00*"):
+        # CCITT/JPEG-in-TIFF/tiled/planar raise the honest stub
         return tiff_decode_pixels(b)
-    if backend == "pure" and b[:4] in (
-        b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"
-    ):
+    if b[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
         # ICO/CUR favicons: largest entry, PNG-in-ICO or 32/8-bpp DIB
         return ico_decode_pixels(b)
-    if backend == "pure" and b[:2] == b"\xff\xd8":
-        # baseline JPEG decodes for real on the pure path too; under
-        # 'pil' the PIL codec takes it (lossy decode differs across
-        # decoders by design — the documented backend contract)
+    if b[:2] == b"\xff\xd8":
         return jpeg_decode_pixels(b)
-    if backend == "pure" or b[:8] == _PNG_SIG:
-        return png_decode_pixels(b)
-    if not _pil_available():
-        raise ImportError(
-            "decode_image_pixels(backend='pil') requires PIL; install "
-            "it or use backend='pure' (PNG-only, codec-free)"
-        )
-    mime, w, h, _ch, _extra, ok = parse_media_header(b)
-    if not (mime or "").startswith("image/"):
-        return None
-    if ok and w and h and w * h > 16_000_000:  # same bound as PNG path
-        return None
-    import io
-
-    import numpy as np
-
-    try:
-        from PIL import Image
-
-        im = Image.open(io.BytesIO(b))
-        if im.size[0] * im.size[1] > 16_000_000:
-            return None
-        im.load()
-        if im.mode not in ("L", "LA", "RGB", "RGBA"):
-            im = im.convert("RGB")
-    except Exception:
-        return None
-    arr = np.asarray(im, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    return arr
+    return png_decode_pixels(b)
 
 
 IMAGE_HASH_SCHEMA = (
@@ -1128,55 +829,33 @@ IMAGE_HASH_SCHEMA = (
 
 
 def image_pixel_hashes(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "id",
-    backend: str = "pure",
+    df: DataFrame, content_col: str = "content", id_col: str = "id"
 ) -> DataFrame:
     """(id, width, height, channels, ahash, dhash, ok) per blob via
     REAL pixel decode (``decode_image_pixels``) — hashes as 16-hex-char
     strings so the full unsigned 64-bit value survives every engine
-    (bigints sign-flip above 2^63).  Undecodable/null payloads →
-    ok=False with NULL hashes — with PNG/GIF/BMP and JPEG (baseline
-    AND progressive, restart intervals included) all decoding for
-    real on the default pure backend, that now means corrupt streams
-    and the residual stub tiers (arithmetic JPEG, RLE BMP).  ``backend="pil"`` swaps the pixel source for PIL's
-    codecs; the integer luma → cell-mean → aHash/dHash grid is
-    identical either way.  Map-side Arrow batch pipeline, no
-    shuffle."""
+    (bigints sign-flip above 2^63).  Undecodable payloads, the
+    residual stub tiers (arithmetic JPEG, …) and NULLs → ok=False with
+    NULL hashes (the ``map_payloads`` contract).  Map-side Arrow batch
+    pipeline, no shuffle."""
+    bad = ((0, 0, 0, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None  # pure backend JPEG-tier → flagged row
-            if px is None:
-                return (0, 0, 0, None, None, False)
-            h, w, ch = px.shape
-            return (w, h, ch, format(image_ahash(px), "016x"),
-                    format(image_dhash(px), "016x"), True)
+    def tail(b: bytes):
+        px = decode_image_pixels(b)
+        if px is None:
+            return bad
+        h, w, ch = px.shape
+        return ((w, h, ch, format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            # the select below aliases id_col to "id" before the Arrow
-            # hop, so the batch frame always carries "id" regardless of
-            # the caller's column name
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "width", "height", "channels",
-                         "ahash", "dhash", "ok"],
-            )
+    return map_payloads(df, tail, IMAGE_HASH_SCHEMA, content_col, id_col, bad)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, IMAGE_HASH_SCHEMA
-    )
+
+def _check_resize_args(out_w: int, out_h: int, mode: str) -> None:
+    if out_w <= 0 or out_h <= 0:
+        raise ValueError("target dims must be positive")
+    if mode not in ("nearest", "mean", "bilinear"):
+        raise ValueError(f"unknown resize mode {mode!r}")
 
 
 def image_resize_pixels(px, out_w: int, out_h: int, mode: str = "bilinear"):
@@ -1197,8 +876,7 @@ def image_resize_pixels(px, out_w: int, out_h: int, mode: str = "bilinear"):
     import numpy as np
 
     h, w, c = px.shape
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError("target dims must be positive")
+    _check_resize_args(out_w, out_h, mode)
     if mode == "nearest":
         ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(
             np.int64), h - 1)
@@ -1216,8 +894,6 @@ def image_resize_pixels(px, out_w: int, out_h: int, mode: str = "bilinear"):
             axis=(1, 3), dtype=np.int64
         )
         return (acc // (fy * fx)).astype(np.uint8)
-    if mode != "bilinear":
-        raise ValueError(f"unknown resize mode {mode!r}")
     ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
     xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
     y0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
@@ -1246,44 +922,24 @@ def resize_images(
     mode: str = "bilinear",
     content_col: str = "content",
     id_col: str = "id",
-    backend: str = "auto",
 ) -> DataFrame:
     """(id, width, height, channels, content, ok) — REAL pixel decode
-    (``decode_image_pixels``, the backend contract) → real resize
-    (``image_resize_pixels``) → lossless PNG re-encode of the
-    thumbnail.  The decode→normalize step of any multimodal training
-    pipeline, as one map-side Arrow pass; undecodable blobs and
-    residual stub tiers yield ok=false rows with NULL content (never
-    task failures)."""
+    (``decode_image_pixels``) → real resize (``image_resize_pixels``)
+    → lossless PNG re-encode of the thumbnail.  The decode→normalize
+    step of any multimodal training pipeline, as one map-side Arrow
+    pass; undecodable blobs and residual stub tiers yield ok=false rows
+    with NULL content (the ``map_payloads`` contract)."""
+    _check_resize_args(out_w, out_h, mode)
+    bad = ((0, 0, 0, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None
-            if px is None:
-                return (0, 0, 0, None, False)
-            small = image_resize_pixels(px, out_w, out_h, mode)
-            return (out_w, out_h, small.shape[2], png_encode(small), True)
+    def tail(b: bytes):
+        px = decode_image_pixels(b)
+        if px is None:
+            return bad
+        small = image_resize_pixels(px, out_w, out_h, mode)
+        return ((out_w, out_h, small.shape[2], png_encode(small), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "width", "height", "channels",
-                         "content", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, RESIZE_SCHEMA
-    )
+    return map_payloads(df, tail, RESIZE_SCHEMA, content_col, id_col, bad)
 
 
 def hash_hex_bands(col: F.Column, n_bands: int = 4) -> list[F.Column]:
@@ -1317,7 +973,6 @@ def image_phash_dedup(
     n_bands: int = 4,
     max_bucket_size: int = 200,
     probe_ahash: bool = False,
-    backend: str = "auto",
 ) -> DataFrame:
     """Near-duplicate image clustering: real pixel decode → dHash →
     banded LSH pairing → Hamming verify → connected components.
@@ -1361,9 +1016,7 @@ def image_phash_dedup(
     copies of one blank image are one node, not a capped bucket.
     Components use the scale-adaptive closure (driver union-find on
     bounded pair sets, iterative join loop beyond)."""
-    hashes = image_pixel_hashes(df, content_col, id_col, backend).filter(
-        "ok"
-    )
+    hashes = image_pixel_hashes(df, content_col, id_col).filter("ok")
     return _hash_cluster(
         hashes.select("id", "dhash", "ahash"),
         "dhash",
@@ -1664,19 +1317,7 @@ def attach_png_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic PNG bytes per id — the
     fixture generator for the pixel-decode path (production blobs come
     straight off a parquet binary column instead)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_png_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_png_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 24, d % 17 == 0))
@@ -1696,21 +1337,7 @@ def build_png_i_blob(doc_id: int) -> bytes:
 
 def attach_png_i_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the Adam7-interlaced PNG fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_png_i_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_png_i_blob, id_col)
 
 
 #: shared palette for the RLE8 fixtures: i → (i, 3i % 256, 7i % 256)
@@ -1771,41 +1398,12 @@ def build_bmp_variant_blob(doc_id: int) -> bytes:
 
 def attach_bmp_variant_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RLE4/bitfields BMP fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_bmp_variant_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_variant_blob, id_col)
 
 
 def attach_bmp_rle_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RLE8 BMP fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_bmp_rle_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_rle_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -2365,40 +1963,12 @@ def build_ms_adpcm_blob(doc_id: int) -> bytes:
 
 def attach_ms_adpcm_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MS-ADPCM WAV fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ms_adpcm_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ms_adpcm_blob, id_col)
 
 
 def attach_adpcm_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the IMA-ADPCM WAV fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_adpcm_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_adpcm_blob, id_col)
 
 
 def audio_pcm_metrics(arr) -> tuple:
@@ -2442,37 +2012,18 @@ def audio_pcm_features(
     duration) so every engine pins the same values.  Non-PCM16 /
     malformed / null payloads → ok=false with zeroed features.
     Map-side Arrow batch pipeline, no shuffle."""
+    bad = ((0, 0, 0, 0, 0, 0, 0, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None  # float/compressed tier → flagged
-            if dec is None:
-                return (0, 0, 0, 0, 0, 0, 0, False)
-            rate, ch, arr = dec
-            n, peak, abs_sum, zc = audio_pcm_metrics(arr)
-            return (rate, ch, n, n * 1000 // rate, peak, abs_sum, zc,
-                    True)
+    def tail(b: bytes):
+        dec = wav_decode_samples(b)
+        if dec is None:
+            return bad
+        rate, ch, arr = dec
+        n, peak, abs_sum, zc = audio_pcm_metrics(arr)
+        return ((rate, ch, n, n * 1000 // rate, peak, abs_sum, zc, True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, 0, 0, 0, 0, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_rate", "n_channels", "n_frames",
-                         "duration_ms", "peak", "abs_sum",
-                         "zero_crossings", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_FEATURE_SCHEMA
+    return map_payloads(
+        df, tail, AUDIO_FEATURE_SCHEMA, content_col, id_col, bad
     )
 
 
@@ -2540,19 +2091,7 @@ def build_wav_blob(doc_id: int) -> bytes:
 def attach_wav_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic WAV bytes per id — the
     audio sibling of ``attach_png_blob``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_wav_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -2608,21 +2147,7 @@ def _gif_anim_blob_cached(cls: int, trunc17: bool) -> bytes:
 
 def attach_gif_anim_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the animated-GIF fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_gif_anim_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_gif_anim_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 16, d % 13 == 0, d % 17 == 0))
@@ -2673,21 +2198,7 @@ def build_wav_codec_blob(doc_id: int) -> bytes:
 
 def attach_wav_codec_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the WAV codec-tier fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_codec_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_codec_blob, id_col)
 
 
 def resample_pcm(arr, src_rate: int, dst_rate: int):
@@ -2737,37 +2248,20 @@ def resample_audio(
     linear resample to ``dst_rate`` (``resample_pcm``) → PCM16 WAV
     re-encode.  One map-side Arrow pass; malformed payloads and the
     residual codec stubs yield ok=false rows with NULL content."""
+    if dst_rate <= 0:
+        raise ValueError(f"dst_rate must be positive, got {dst_rate}")
+    bad = ((0, 0, 0, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None  # ADPCM/MP3-in-RIFF stub tier
-            if dec is None:
-                return (0, 0, 0, None, False)
-            rate, _ch, arr = dec
-            out = resample_pcm(arr, rate, dst_rate)
-            return (rate, dst_rate, out.shape[0],
-                    wav_encode(dst_rate, out), True)
+    def tail(b: bytes):
+        dec = wav_decode_samples(b)
+        if dec is None:
+            return bad
+        rate, _ch, arr = dec
+        out = resample_pcm(arr, rate, dst_rate)
+        return ((rate, dst_rate, out.shape[0], wav_encode(dst_rate, out),
+                 True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "src_rate", "dst_rate", "n_frames",
-                         "content", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, RESAMPLE_SCHEMA
-    )
+    return map_payloads(df, tail, RESAMPLE_SCHEMA, content_col, id_col, bad)
 
 
 def audio_envelope_hash(arr) -> int:
@@ -2809,34 +2303,18 @@ def audio_envelope_hashes(
     decode — hash as a 16-hex-char string (same carrier convention as
     the image hashes).  Non-PCM16/malformed/null payloads → ok=false
     with NULL hash.  Map-side Arrow batch pipeline, no shuffle."""
+    bad = ((0, 0, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None
-            if dec is None:
-                return (0, 0, None, False)
-            rate, _ch, arr = dec
-            return (rate, int(arr.shape[0]),
-                    format(audio_envelope_hash(arr), "016x"), True)
+    def tail(b: bytes):
+        dec = wav_decode_samples(b)
+        if dec is None:
+            return bad
+        rate, _ch, arr = dec
+        return ((rate, int(arr.shape[0]),
+                 format(audio_envelope_hash(arr), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_rate", "n_frames", "ehash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_HASH_SCHEMA
+    return map_payloads(
+        df, tail, AUDIO_HASH_SCHEMA, content_col, id_col, bad
     )
 
 
@@ -2913,21 +2391,7 @@ def build_wav_dedup_blob(doc_id: int) -> bytes:
 
 def attach_wav_dedup_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the dedup-fixture WAVs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_dedup_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_dedup_blob, id_col)
 
 
 def _g711_encode(arr, audio_fmt, np):
@@ -2987,41 +2451,29 @@ def audio_window_hashes(
     error on the fixture family, pinned in pytest).  Undecodable /
     sub-window clips → one ok=false row.  Map-side Arrow batches, no
     shuffle."""
+    if window_frames <= 0:
+        raise ValueError(
+            f"window_frames must be positive, got {window_frames}"
+        )
+    bad = ((None, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None
-            n_win = 0 if dec is None else \
-                int(dec[2].shape[0]) // window_frames
-            if n_win == 0:
-                return ((None, None, None, False),)
-            arr = dec[2]
-            return tuple(
-                (k, n_win,
-                 format(audio_envelope_hash(
-                     arr[k * window_frames:(k + 1) * window_frames]
-                 ), "016x"), True)
-                for k in range(n_win)
-            )
+    def tails(b: bytes):
+        dec = wav_decode_samples(b)
+        n_win = 0 if dec is None else \
+            int(dec[2].shape[0]) // window_frames
+        if n_win == 0:
+            return bad
+        arr = dec[2]
+        return tuple(
+            (k, n_win,
+             format(audio_envelope_hash(
+                 arr[k * window_frames:(k + 1) * window_frames]
+             ), "016x"), True)
+            for k in range(n_win)
+        )
 
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "win_idx", "n_windows", "whash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_WINDOW_SCHEMA
+    return map_payloads(
+        df, tails, AUDIO_WINDOW_SCHEMA, content_col, id_col, bad
     )
 
 
@@ -3099,21 +2551,7 @@ def build_wav_align_blob(doc_id: int) -> bytes:
 
 def attach_wav_align_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the alignment-fixture WAVs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_align_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_align_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -3564,19 +3002,7 @@ def build_gif_blob(doc_id: int) -> bytes:
 
 def attach_gif_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the GIF-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_gif_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_gif_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -4008,19 +3434,7 @@ def build_bmp_blob(doc_id: int) -> bytes:
 
 def attach_bmp_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the BMP-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_bmp_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -5087,21 +4501,7 @@ def _jpeg_blob_cached(cls: int, plant13: bool, trunc17: bool) -> bytes:
 
 def attach_jpeg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the JPEG-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_jpeg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_jpeg_blob, id_col)
 
 
 def build_jpeg_prog_blob(doc_id: int) -> bytes:
@@ -5140,21 +4540,7 @@ def _jpeg_prog_blob_cached(cls: int, mode: int, trunc17: bool) -> bytes:
 def attach_jpeg_prog_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the progressive/restart JPEG fixture blobs
     per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_jpeg_prog_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_jpeg_prog_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -5168,7 +4554,7 @@ def attach_jpeg_prog_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # decode path: sample frames -> per-frame perceptual hash -> near-dup
 # video detection through the shared _hash_cluster core.  Other codecs
 # (H.264 etc.) genuinely need external decoders and remain the honest
-# NotImplementedError tier (or imageio via sample_frames).
+# NotImplementedError tier.
 
 VIDEO_FRAME_HASH_SCHEMA = (
     "id long, frame_idx int, n_frames int, width int, height int, "
@@ -5222,8 +4608,7 @@ def avi_mjpeg_frames(b: bytes):
     chunks inside LIST movi (one level of LIST ``rec `` nesting
     tolerated) are the frames.  A vids stream whose handler is not
     MJPG raises ``NotImplementedError`` — H.264-tier codecs genuinely
-    need an external decoder (route through ``sample_frames``'s
-    imageio backend instead)."""
+    need an external decoder."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         return None
 
@@ -5245,8 +4630,7 @@ def avi_mjpeg_frames(b: bytes):
                     if handler not in (b"MJPG", b"mjpg", b"\x00\x00\x00\x00"):
                         raise NotImplementedError(
                             "AVI video codec %r needs an external decoder "
-                            "(only MJPG decodes codec-free); use "
-                            "sample_frames' imageio backend" % handler
+                            "(only MJPG decodes codec-free)" % handler
                         )
             elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
                 out.append(bytes(buf[pos + 8:pos + 8 + ln]))
@@ -5262,84 +4646,22 @@ def avi_mjpeg_frames(b: bytes):
     return frames
 
 
-def _imageio_frame_pixels(payload: bytes, max_frames: int) -> list:
-    """H.264-tier frame tap: decode the container with imageio
-    (pyav/ffmpeg underneath), sample up to ``max_frames`` frames
-    with an even stride, and return (h, w, 3) uint8 arrays straight
-    onto the shared hash grid (no PNG round-trip — the pixel sibling
-    of ``_imageio_frames``).  Undecodable payload → []."""
-    import io
-
-    import imageio.v3 as iio
-    import numpy as np
-
-    try:
-        frames = iio.imread(io.BytesIO(payload), index=None)
-    except Exception:  # noqa: BLE001 — undecodable blob → no frames
-        return []
-    frames = np.asarray(frames)
-    if frames.ndim == 2:  # single grayscale image: (h, w)
-        frames = frames[None, :, :, None]
-    elif frames.ndim == 3:  # single image decodes as (h, w, c)
-        frames = frames[None, ...]
-    if frames.ndim != 4 or frames.shape[0] == 0:
-        return []
-    n = min(max_frames, frames.shape[0])
-    step = max(1, frames.shape[0] // n)
-    out = []
-    for k in range(n):
-        f = np.asarray(frames[k * step])
-        if f.ndim == 2:
-            f = f[:, :, None]
-        if f.shape[2] == 1:  # grayscale → replicate onto RGB grid
-            f = np.repeat(f, 3, axis=2)
-        out.append(np.ascontiguousarray(f[:, :, :3], dtype=np.uint8))
-    return out
-
-
-def _is_video_container(b: bytes) -> bool:
-    """ISO-BMFF (MP4/MOV/fMP4) or Matroska/WebM magic — the
-    containers whose codecs (H.264/H.265/VP9/AV1) genuinely need an
-    external decoder."""
-    return (len(b) > 12 and b[4:8] == b"ftyp") \
-        or b[:4] == b"\x1a\x45\xdf\xa3"
-
-
-def _video_blob_frame_pixels(b: bytes, max_frames: int,
-                             backend: str):
+def _video_blob_frame_pixels(b: bytes, max_frames: int):
     """Per-blob dispatch for ``video_frame_hashes``: list of
     (h, w, c) uint8 frames (``None`` entries for undecodable
     frames), or ``None`` when the blob yields no frames at all.
-
-    Codec-free paths (MJPEG-in-AVI, animated GIF) run on every
-    backend.  With ``backend != 'pure'``, blobs those paths cannot
-    decode — MP4/WebM containers and AVIs with a non-MJPG codec —
-    fall through to the imageio(+pyav/ffmpeg) frame tap when that
-    import succeeds (resolved INSIDE the task, like the PIL probe:
-    an executor without the codec degrades to ok=false rows, never
-    a task failure).  ``backend='pure'`` never touches an external
-    codec, so registry oracle hashes stay deterministic."""
+    MJPEG-in-AVI and animated GIF decode codec-free.  MP4/WebM yield
+    ``None`` and an AVI with a non-MJPG codec raises
+    ``NotImplementedError``: both need an external decoder, and both
+    end as the blob's one ok=false row."""
     def _frame_pixels(fb: bytes):
         try:
-            return decode_image_pixels(fb, backend)
-        except (NotImplementedError, ImportError):
-            return None  # stub tier / missing codec → ok=false row
-
-    def _tap():
-        if backend == "pure" or not _video_backend_available():
-            return None
-        try:
-            return _imageio_frame_pixels(b, max_frames) or None
-        except ImportError:
-            return None
+            return decode_image_pixels(fb)
+        except NotImplementedError:
+            return None  # stub tier → this frame's ok=false row
 
     if b[:4] == b"RIFF":
-        try:
-            frames = avi_mjpeg_frames(b)
-        except NotImplementedError:
-            # non-MJPG codec: the honest tier, unless the external
-            # frame tap is importable on this executor
-            return _tap()
+        frames = avi_mjpeg_frames(b)  # a non-MJPG codec raises
         if not frames:
             return None
         n = min(max_frames, len(frames))
@@ -5352,8 +4674,6 @@ def _video_blob_frame_pixels(b: bytes, max_frames: int,
         n = min(max_frames, len(frames))
         step = max(1, len(frames) // n)
         return [frames[k * step] for k in range(n)]
-    if _is_video_container(b):
-        return _tap()
     return None
 
 
@@ -5362,7 +4682,6 @@ def video_frame_hashes(
     content_col: str = "content",
     id_col: str = "id",
     max_frames: int = 4,
-    backend: str = "auto",
 ) -> DataFrame:
     """Row-expanding REAL animation decode: MJPEG-in-AVI (RIFF walk →
     per-frame JPEG pixel decode) and ANIMATED GIF (full composition:
@@ -5370,59 +4689,35 @@ def video_frame_hashes(
     sampled up to ``max_frames``, each sampled frame hashed.
     ``(id, frame_idx, n_frames, width, height, ahash, dhash, ok)`` —
     ``n_frames`` is the SAMPLED count, ``frame_idx`` its 0-based
-    index; malformed containers or undecodable frames yield one
-    ``ok=false`` row per blob/frame, never task failures (the
-    image_pixel_hashes contract).  ``backend`` governs the per-frame
-    JPEG pixel source (``decode_image_pixels`` contract): the
-    PRODUCTION default ``'auto'`` takes PIL's native codec when
-    importable (1–2 orders faster per byte, the r13 verdict's fleet
-    bottleneck) and the pure decoder otherwise; registry oracle
-    queries pin ``'pure'`` so the driver's value hash never depends
-    on the installed codec.  GIF composition is codec-free either
-    way.  Since r19, ``backend='auto'`` also taps imageio
-    (pyav/ffmpeg) for H.264-tier containers (MP4/WebM, non-MJPG
-    AVI) via ``_video_blob_frame_pixels`` — re-encoded copies of an
-    MJPEG class then land on the same hash grid and merge in
-    ``video_near_dup``; without the import the tier stays the
-    honest ok=false boundary.  Map-side Arrow batches, no shuffle."""
-    if backend not in ("auto", "pil", "pure"):
-        raise ValueError(f"unknown pixel backend {backend!r}")
+    index; malformed containers and containers that need an external
+    codec (MP4/WebM, non-MJPG AVI) yield one ``ok=false`` row per
+    blob, an undecodable frame one ``ok=false`` row for that frame
+    (the ``map_payloads`` contract).  Map-side Arrow batches, no
+    shuffle."""
+    if max_frames < 1:
+        raise ValueError(f"max_frames must be >= 1, got {max_frames}")
+    bad = ((None, None, 0, 0, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            pxs = _video_blob_frame_pixels(b, max_frames, backend)
-            if not pxs:
-                return ((None, None, 0, 0, None, None, False),)
-            n = len(pxs)
-            out = []
-            for k, px in enumerate(pxs):
-                if px is None:
-                    out.append((k, n, 0, 0, None, None, False))
-                    continue
-                h, w, _ch = px.shape
-                out.append(
-                    (k, n, w, h,
-                     format(image_ahash(px), "016x"),
-                     format(image_dhash(px), "016x"), True)
-                )
-            return tuple(out)
-
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, 0, 0, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "frame_idx", "n_frames", "width", "height",
-                         "ahash", "dhash", "ok"],
+    def tails(b: bytes):
+        pxs = _video_blob_frame_pixels(b, max_frames)
+        if not pxs:
+            return bad
+        n = len(pxs)
+        out = []
+        for k, px in enumerate(pxs):
+            if px is None:
+                out.append((k, n, 0, 0, None, None, False))
+                continue
+            h, w, _ch = px.shape
+            out.append(
+                (k, n, w, h,
+                 format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True)
             )
+        return tuple(out)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, VIDEO_FRAME_HASH_SCHEMA
+    return map_payloads(
+        df, tails, VIDEO_FRAME_HASH_SCHEMA, content_col, id_col, bad
     )
 
 
@@ -5433,7 +4728,6 @@ def video_near_dup(
     threshold: int = 6,
     n_bands: int = 4,
     max_bucket_size: int = 64,
-    backend: str = "auto",
 ) -> DataFrame:
     """Near-duplicate VIDEO clustering — the re-encoded-video analogue
     of ``image_phash_dedup``: real frame decode → the FIRST sampled
@@ -5447,7 +4741,7 @@ def video_near_dup(
     scope by design: that needs frame-sequence alignment, a stated
     future tier, not a silent recall claim."""
     first = video_frame_hashes(
-        df, content_col, id_col, max_frames=1, backend=backend
+        df, content_col, id_col, max_frames=1
     ).filter("ok AND frame_idx = 0")
     return _hash_cluster(
         first.select("id", "dhash", "ahash"),
@@ -5466,7 +4760,6 @@ def video_near_dup_aligned(
     max_frames: int = 8,
     min_shared: int = 2,
     max_bucket_size: int = 64,
-    backend: str = "auto",
 ) -> DataFrame:
     """Trim-tolerant near-duplicate VIDEO clustering — the alignment
     tier the first-frame signature (``video_near_dup``) explicitly
@@ -5487,9 +4780,9 @@ def video_near_dup_aligned(
     shared-frame counting is one groupBy on the capped pairs; then
     the scale-adaptive connected components.  Returns (id, cluster =
     global min id of the merged class) for every decodable video."""
-    fh = video_frame_hashes(
-        df, content_col, id_col, max_frames, backend=backend
-    ).filter("ok")
+    fh = video_frame_hashes(df, content_col, id_col, max_frames).filter(
+        "ok"
+    )
     return _shared_hash_cluster(
         fh.select("id", "dhash"), "dhash", min_shared, max_bucket_size
     )
@@ -5625,21 +4918,7 @@ def _avi_trim_blob_cached(cls: int, variant: int, trunc: bool) -> bytes:
 
 def attach_avi_trim_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the alignment-tier AVI fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_avi_trim_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_avi_trim_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -5655,12 +4934,9 @@ def attach_avi_trim_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # container without touching the codec — re-muxed copies (different
 # chunking/interleave, same encoded frames) land on identical hash
 # sets, head-trimmed copies still share every remaining sample.
-# RE-ENCODED copies (new coefficients, same pictures) need pixels:
-# that is the r19 imageio(+pyav/ffmpeg) frame tap behind
-# ``video_frame_hashes(backend='auto')`` — when the import resolves
-# on the executor, H.264-tier frames land on the same perceptual
-# hash grid as MJPEG/GIF and merge in ``video_near_dup``; without
-# it the tier stays the honest ok=false boundary.
+# RE-ENCODED copies (new coefficients, same pictures) need pixels,
+# which for H.264-tier codecs need an external decoder: that tier
+# stays the honest ok=false boundary of ``video_frame_hashes``.
 
 
 def _mp4_boxes(b: bytes, lo: int, hi: int):
@@ -6718,38 +5994,27 @@ def mp4_sample_hashes(
     ``mp4_byte_dedup``.  Map-side Arrow batches, no shuffle."""
     import hashlib as _hl
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            ranges = media_sample_ranges(b)
-            if not ranges:
-                return ((None, None, None, False),)
-            n = min(max_samples, len(ranges))
-            step = max(1, len(ranges) // n)
-            return tuple(
-                (k, n,
-                 _hl.md5(_sample_bytes(b, ranges[k * step])).hexdigest(),
-                 True)
-                for k in range(n)
-            )
+    if max_samples < 1:
+        raise ValueError(f"max_samples must be >= 1, got {max_samples}")
+    bad = ((None, None, None, False),)
 
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_idx", "n_samples",
-                         "sample_hash", "ok"],
-            )
+    def tails(b: bytes):
+        ranges = media_sample_ranges(b)
+        if not ranges:
+            return bad
+        n = min(max_samples, len(ranges))
+        step = max(1, len(ranges) // n)
+        return tuple(
+            (k, n, _hl.md5(_sample_bytes(b, ranges[k * step])).hexdigest(),
+             True)
+            for k in range(n)
+        )
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return map_payloads(
+        df, tails,
         "id long, sample_idx int, n_samples int, "
         "sample_hash string, ok boolean",
+        content_col, id_col, bad,
     )
 
 
@@ -6869,40 +6134,12 @@ def _media_mux_blob_cached(cls: int, variant: int, trunc: bool) -> bytes:
 
 def attach_media_mux_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the cross-container fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_media_mux_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_media_mux_blob, id_col)
 
 
 def attach_mp4_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MP4 byte-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_mp4_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_mp4_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 12, d % 13 == 0, d % 17 == 0))
@@ -6991,40 +6228,12 @@ def attach_wav_mp3_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the MP3-in-RIFF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_mp3_blob, id_col)
 
 
 def attach_mp3_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MP3 frame-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_mp3_blob, id_col)
 
 
 def _ogg_fixture_packet(j: int, seed_tag: bytes = b"oggp-") -> bytes:
@@ -7083,21 +6292,7 @@ def build_ogg_blob(doc_id: int) -> bytes:
 
 def attach_ogg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the Ogg packet-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ogg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ogg_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 20, d % 13 == 0, d % 17 == 0))
@@ -7139,21 +6334,7 @@ def build_audio_mux_blob(doc_id: int) -> bytes:
 
 def attach_audio_mux_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the cross-container audio fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_audio_mux_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_audio_mux_blob, id_col)
 
 
 def _avi_fixture_frames(cls: int):
@@ -7208,21 +6389,7 @@ def _avi_blob_cached(cls: int, prog: bool, trunc: bool) -> bytes:
 
 def attach_avi_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MJPEG-in-AVI fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_avi_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_avi_blob, id_col)
 
 
 def _xfmt_fixture_pixels(cls: int):
@@ -7270,18 +6437,9 @@ def _xfmt_blob_cached(cls: int, is_png: bool) -> bytes:
 def attach_xfmt_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """TWO rows per input id — (2·id, PNG blob) and (2·id+1, JPEG
     blob) of the same fixture frame."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf[id_col]:
-                rows.append((int(i) * 2, build_xfmt_blob(int(i) * 2)))
-                rows.append((int(i) * 2 + 1, build_xfmt_blob(int(i) * 2 + 1)))
-            yield pd.DataFrame(rows, columns=["id", "content"])
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    twice = F.col(id_col).cast("long") * 2
+    ids = df.select(F.explode(F.array(twice, twice + 1)).alias(id_col))
+    return attach_blobs(ids, build_xfmt_blob, id_col)
 
 
 # ---- EXIF: TIFF metadata walk (JPEG APP1 + PNG eXIf) -----------------
@@ -7545,40 +6703,23 @@ def image_exif_meta(
     header speed over 100 TB of camera images.  ok=false when EXIF is
     absent or its TIFF block is torn.  Map-side Arrow batches, no
     shuffle."""
+    bad = ((None, None, None, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                meta = (
-                    exif_parse(bytes(payload))
-                    if payload is not None else None
-                )
-                if meta is None:
-                    rows.append((i, None, None, None, None, None,
-                                 False))
-                    continue
-                rows.append((
-                    i, meta.get("orientation"), meta.get("make"),
-                    meta.get("model"), meta.get("datetime"),
-                    meta.get("datetime_original"), True,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "orientation", "make", "model",
-                         "datetime", "datetime_original", "ok"],
-            )
+    def tail(b: bytes):
+        meta = exif_parse(b)
+        if meta is None:
+            return bad
+        return ((meta.get("orientation"), meta.get("make"),
+                 meta.get("model"), meta.get("datetime"),
+                 meta.get("datetime_original"), True),)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, EXIF_META_SCHEMA
+    return map_payloads(
+        df, tail, EXIF_META_SCHEMA, content_col, id_col, bad, memo=False
     )
 
 
 def image_oriented_hashes(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "id",
-    backend: str = "pure",
+    df: DataFrame, content_col: str = "content", id_col: str = "id"
 ) -> DataFrame:
     """(id, ahash, dhash, ok) with pixels NORMALIZED by the EXIF
     orientation tag before hashing — the orientation-tolerant face of
@@ -7587,37 +6728,20 @@ def image_oriented_hashes(
     lossless formats), so camera-image dedup stops missing rotated
     re-exports.  Missing/torn EXIF defaults to orientation 1 per the
     spec; undecodable pixels flag ok=false."""
+    bad = ((None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None
-            if px is None:
-                return (None, None, False)
-            meta = exif_parse(b) or {}
-            px = orient_normalize(px, meta.get("orientation", 1))
-            return (
-                format(image_ahash(px), "016x"),
-                format(image_dhash(px), "016x"),
-                True,
-            )
+    def tail(b: bytes):
+        px = decode_image_pixels(b)
+        if px is None:
+            return bad
+        meta = exif_parse(b) or {}
+        px = orient_normalize(px, meta.get("orientation", 1))
+        return ((format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows, columns=["id", "ahash", "dhash", "ok"]
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, "id long, ahash string, dhash string, ok boolean"
+    return map_payloads(
+        df, tail, "id long, ahash string, dhash string, ok boolean",
+        content_col, id_col, bad,
     )
 
 
@@ -7651,21 +6775,7 @@ def build_exif_jpeg_blob(doc_id: int) -> bytes:
 
 def attach_exif_jpeg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EXIF JPEG fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_exif_jpeg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_exif_jpeg_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 32, d % 17 == 0))
@@ -7700,21 +6810,7 @@ def build_exif_png_blob(doc_id: int) -> bytes:
 
 def attach_exif_png_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the orientation-packaging PNG fixtures."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_exif_png_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_exif_png_blob, id_col)
 
 
 # ---- ID3v2: MP3 tag metadata walk (the audio face of EXIF) ----------
@@ -7886,34 +6982,20 @@ def audio_id3_meta(
     the frame data, the sibling of ``image_exif_meta``.  ok=false
     when the tag is absent or torn.  Map-side Arrow batches, no
     shuffle."""
+    bad = ((None, None, None, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                meta = (
-                    id3v2_frames(bytes(payload))
-                    if payload is not None else None
-                )
-                if meta is None:
-                    rows.append((i, None, None, None, None, None,
-                                 False))
-                    continue
-                rows.append((
-                    i, meta.get("title"), meta.get("artist"),
-                    meta.get("album"), meta.get("year"),
-                    meta.get("track"), True,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "title", "artist", "album", "year",
-                         "track", "ok"],
-            )
+    def tail(b: bytes):
+        meta = id3v2_frames(b)
+        if meta is None:
+            return bad
+        return ((meta.get("title"), meta.get("artist"), meta.get("album"),
+                 meta.get("year"), meta.get("track"), True),)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return map_payloads(
+        df, tail,
         "id long, title string, artist string, album string, "
         "year string, track string, ok boolean",
+        content_col, id_col, bad, memo=False,
     )
 
 
@@ -7949,21 +7031,7 @@ def build_id3_mp3_blob(doc_id: int) -> bytes:
 
 def attach_id3_mp3_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ID3-tagged MP3 fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_id3_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_id3_mp3_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -8234,8 +7302,7 @@ def tiff_decode_pixels(b: bytes):
         # mode this module's honest-flag contract forbids.  Recall
         # statement: Compression-6 mass is 1990s scanner legacy,
         # negligible in current crawls; if telemetry ever shows
-        # otherwise the fix is an import-try PIL/libtiff backend
-        # (the decode_images(backend='pil') seam), not a hand-rolled
+        # otherwise the fix is a libtiff binding, not a hand-rolled
         # guesser.
         raise NotImplementedError(
             "TIFF compression 6 (old-style JPEG; deprecated by TTN2, "
@@ -8818,21 +7885,7 @@ def build_tiff_blob(doc_id: int) -> bytes:
 
 def attach_tiff_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the TIFF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_tiff_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_tiff_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -9034,18 +8087,4 @@ def build_ico_blob(doc_id: int) -> bytes:
 
 def attach_ico_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ICO fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ico_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ico_blob, id_col)

@@ -55,11 +55,11 @@ boundary — malformed bytes are ``ok=false`` rows.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.payload_cache import attach_blobs, map_payloads, payload_memo
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -1668,6 +1668,8 @@ def _pdf_text_tail(b: bytes, passwords: tuple = ()) -> tuple:
     except _Stub as e:
         return (None, None, None, False, str(e))
     except (_Torn, RecursionError):
+        # the catch-all's row too, but returned so that the blob memo
+        # of pdf_text_from_ids caches it
         return (None, None, None, False, "torn")
 
 
@@ -1675,32 +1677,30 @@ def pdf_text_from_ids(
     df: DataFrame, build, id_col: str = "doc_id",
     passwords: tuple = (),
 ) -> DataFrame:
-    """``pdf_text`` over blobs BUILT IN-TASK: one ``mapInPandas``
-    builds each id's fixture blob and extracts its text in the same
-    task, so the payload bytes never cross the Arrow boundary at all
-    (guide §8 "move heavy bytes once" — here zero times; the
-    attach-then-decode composition ships every blob Python → JVM →
-    Python, which for the 180 KB composite-font fixtures is ~1 GB of
-    Arrow traffic per 5k rows and dominated the query).  Same output
-    schema and rows as ``pdf_text(attach(df))``."""
+    """``pdf_text`` over blobs BUILT IN-TASK: one Arrow map builds each
+    id's fixture blob and extracts its text in the same task, so the
+    payload bytes never cross the Arrow boundary at all (guide §8
+    "move heavy bytes once" — here zero times; the attach-then-decode
+    composition ships every blob Python → JVM → Python, which for the
+    180 KB composite-font fixtures is ~1 GB of Arrow traffic per 5k
+    rows and dominated the query).  Same output schema and rows as
+    ``pdf_text(attach(df))``.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal import _payload_memo
-
-        tail = _payload_memo(lambda b: _pdf_text_tail(b, passwords))
-        for pdf_batch in batches:
-            rows = [
-                (i, *tail(build(int(i)))) for i in pdf_batch[id_col]
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_pages", "n_chars", "text", "ok",
-                         "reason"],
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, PDF_TEXT_SCHEMA
+    The mapped "payload" is the id's decimal text, so the helper's
+    memo stays off; the text decode is memoized on the BUILT blob
+    instead (the memo is unpickled, empty, in every task)."""
+    tail = payload_memo(lambda b: _pdf_text_tail(b, passwords))
+    ids = df.select(
+        F.col(id_col),
+        F.col(id_col).cast("string").cast("binary").alias("_id_text"),
     )
+    return map_payloads(
+        ids, lambda i: (tail(build(int(i))),), PDF_TEXT_SCHEMA,
+        "_id_text", id_col, _PDF_TEXT_BAD, memo=False,
+    )
+
+
+_PDF_TEXT_BAD = ((None, None, None, False, "torn"),)
 
 
 def pdf_text(
@@ -1709,34 +1709,15 @@ def pdf_text(
 ) -> DataFrame:
     """(id, n_pages, n_chars, text, ok, reason) per PDF payload —
     full text extraction via the classic-xref walk.  ``ok=false``
-    rows carry the honest reason: 'torn' (malformed/truncated),
-    'encrypted', 'filter' (non-Flate or a non-PNG predictor),
-    'bomb' (decompression cap).  ``passwords`` are candidate
-    user/owner passwords tried after the empty-password fast path
-    (the list broadcasts inside the UDF closure — keep it small).
-    Map-side Arrow batches, no shuffle; nothing raises across the
-    Arrow boundary."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal import _payload_memo
-
-        tail = _payload_memo(lambda b: _pdf_text_tail(b, passwords))
-        for pdf_batch in batches:
-            rows = []
-            for i, payload in zip(pdf_batch["id"],
-                                  pdf_batch[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False, "torn"))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_pages", "n_chars", "text", "ok",
-                         "reason"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, PDF_TEXT_SCHEMA
+    rows carry the honest reason: 'torn' (malformed/truncated, and
+    any payload the helper's catch-all flags), 'encrypted', 'filter'
+    (non-Flate or a non-PNG predictor), 'bomb' (decompression cap).
+    ``passwords`` are candidate user/owner passwords tried after the
+    empty-password fast path (the list broadcasts inside the UDF
+    closure — keep it small).  Map-side Arrow batches, no shuffle."""
+    return map_payloads(
+        df, lambda b: (_pdf_text_tail(b, passwords),), PDF_TEXT_SCHEMA,
+        content_col, id_col, _PDF_TEXT_BAD,
     )
 
 
@@ -1979,21 +1960,7 @@ def build_pdf_blob(doc_id: int) -> bytes:
 
 def attach_pdf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_blob(int(i)) for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_blob, id_col)
 
 
 # ---- embedded images: PDFs join cross-format image dedup -------------
@@ -2010,71 +1977,51 @@ def pdf_image_hashes(
     packagings.  A torn/encrypted document yields one flagged row;
     per-image stub tiers (CCITT/JBIG2/JPX, exotic colorspaces) flag
     that image only.  Map-side Arrow batches, no shuffle."""
-    from .multimodal import _payload_memo, image_ahash, image_dhash
+    from .multimodal import image_ahash, image_dhash
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            if b[:5] != b"%PDF-":
-                return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
+    torn = ((0, 0, 0, 0, 0, None, None, False, "torn"),)
+
+    def tails(b: bytes):
+        if b[:5] != b"%PDF-":
+            return torn
+        try:
+            doc = PdfDoc(b)
+            pages = doc.pages()
+        except _Stub as e:
+            return ((0, 0, 0, 0, 0, None, None, False, str(e)),)
+        out = []
+        for pno, page in enumerate(pages):
             try:
-                doc = PdfDoc(b)
-                pages = doc.pages()
-            except _Stub as e:
-                return ((0, 0, 0, 0, 0, None, None, False, str(e)),)
-            except (_Torn, RecursionError):
-                return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
-            out = []
-            for pno, page in enumerate(pages):
+                imgs = doc.page_images(page)
+            except (_Torn, _Stub, RecursionError):
+                out.append((pno, 0, 0, 0, 0, None, None, False, "torn"))
+                continue
+            for k, (_name, obj) in enumerate(imgs):
                 try:
-                    imgs = doc.page_images(page)
-                except (_Torn, _Stub, RecursionError):
-                    out.append((pno, 0, 0, 0, 0, None, None,
-                                False, "torn"))
+                    px = doc.image_pixels(obj)
+                except _Stub as e:
+                    out.append((pno, k, 0, 0, 0, None, None, False,
+                                str(e)))
                     continue
-                for k, (_name, obj) in enumerate(imgs):
-                    try:
-                        px = doc.image_pixels(obj)
-                    except _Stub as e:
-                        out.append((pno, k, 0, 0, 0, None,
-                                    None, False, str(e)))
-                        continue
-                    except (_Torn, RecursionError):
-                        out.append((pno, k, 0, 0, 0, None,
-                                    None, False, "torn"))
-                        continue
-                    h, w, c = px.shape
-                    out.append(
-                        (pno, k, w, h, c,
-                         format(image_ahash(px), "016x"),
-                         format(image_dhash(px), "016x"),
-                         True, None)
-                    )
-            return tuple(out)
-
-        tails = _payload_memo(tails)
-        for pdf_batch in batches:
-            rows = []
-            for i, payload in zip(pdf_batch["id"],
-                                  pdf_batch[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, 0, 0, None, None,
-                                 False, "torn"))
+                except (_Torn, RecursionError):
+                    out.append((pno, k, 0, 0, 0, None, None, False,
+                                "torn"))
                     continue
-                rows.extend(
-                    (i, *t) for t in tails(bytes(payload))
+                h, w, c = px.shape
+                out.append(
+                    (pno, k, w, h, c,
+                     format(image_ahash(px), "016x"),
+                     format(image_dhash(px), "016x"),
+                     True, None)
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "page", "img_idx", "width", "height",
-                         "channels", "ahash", "dhash", "ok",
-                         "reason"],
-            )
+        return tuple(out)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return map_payloads(
+        df, tails,
         "id long, page int, img_idx int, width int, height int, "
         "channels int, ahash string, dhash string, ok boolean, "
         "reason string",
+        content_col, id_col, torn,
     )
 
 
@@ -2753,22 +2700,7 @@ def attach_pdf_cid_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the composite-font PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_cid_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_cid_blob, id_col)
 
 
 #: the known candidate password for the scheme-7 fixture class —
@@ -2819,41 +2751,11 @@ def attach_pdf_encrypted_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the encrypted-PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_encrypted_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_encrypted_blob, id_col)
 
 
 def attach_pdf_image_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the PDF-embedded-image fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_image_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_image_blob, id_col)

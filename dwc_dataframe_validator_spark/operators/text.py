@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.payload_cache import _struct, attach_blobs, map_payloads
+
 # Stopword alternations used for quality scoring and the language-ID
 # heuristic.  Tiny fixed sets — these are regex literals folded by
 # Catalyst's ConstantFolding, not data-side joins.
@@ -2403,23 +2405,8 @@ def attach_subtitle_text(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the subtitle fixture text — built with
     Catalyst ``transform``/``concat`` would be opaque; a tiny Arrow
     batch keeps the builder the readable twin of the parser."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_subtitle_text(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content string"
+    return attach_blobs(
+        df, build_subtitle_text, id_col, "id long, content string"
     )
 
 
@@ -2491,40 +2478,21 @@ def docx_text(
     """(id, n_paragraphs, n_chars, text, ok) per DOCX payload — the
     office-document text face, built ENTIRELY from existing tiers
     (zip member walk + map-side extraction).  Map-side Arrow
-    batches, no shuffle; torn/corrupt/missing-part payloads flag,
-    never task failures."""
-    from typing import Iterator
+    batches, no shuffle; torn/corrupt/missing-part payloads flag
+    (the ``map_payloads`` contract)."""
 
-    import pandas as pd
+    def ex(b):
+        got = docx_extract(b)
+        if got is None:
+            return None
+        np_, text_s = got
+        return np_, len(text_s), text_s
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
-
-        def tail(b: bytes):
-            got = docx_extract(b)
-            if got is None:
-                return (None, None, None, False)
-            np_, text_s = got
-            return (np_, len(text_s), text_s, True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_paragraphs", "n_chars", "text",
-                         "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return _office_text_face(
+        df, ex,
         "id long, n_paragraphs int, n_chars int, text string, "
         "ok boolean",
+        content_col, id_col,
     )
 
 
@@ -2601,24 +2569,7 @@ def build_docx_blob(doc_id: int) -> bytes:
 
 def attach_docx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the DOCX fixture blobs."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_docx_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_docx_blob, id_col)
 
 
 # ---- XLSX / PPTX: the remaining office mass rides the zip source -----
@@ -2806,37 +2757,18 @@ def pptx_extract(b: bytes):
     return len(slides), "\n".join(lines)
 
 
-def _office_text_face(df, extract, out_cols, schema, content_col, id_col):
-    """Shared mapInPandas face for the office extractors — one
-    map-side Arrow projection, plants flag instead of failing."""
-    from typing import Iterator
+def _office_text_face(df, extract, schema, content_col, id_col):
+    """Shared face for the office extractors: ``extract(b)`` returns
+    the row tail without its trailing ``ok``, or ``None`` for a plant
+    that flags (all-NULL fields, ``ok=false``)."""
+    schema = _struct(schema)
+    bad = ((None,) * (len(schema.fields) - 2) + (False,),)
 
-    import pandas as pd
+    def tail(b: bytes):
+        got = extract(b)
+        return bad if got is None else (got + (True,),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
-
-        bad = (None,) * (len(out_cols) - 2) + (False,)
-
-        def tail(b: bytes):
-            got = extract(b)
-            if got is None:
-                return bad
-            return got + (True,)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, schema
-    )
+    return map_payloads(df, tail, schema, content_col, id_col, bad)
 
 
 def xlsx_text(
@@ -2853,7 +2785,6 @@ def xlsx_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_sheets", "n_cells", "n_chars", "text", "ok"],
         "id long, n_sheets int, n_cells int, n_chars int, "
         "text string, ok boolean",
         content_col, id_col,
@@ -2874,7 +2805,6 @@ def pptx_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_slides", "n_chars", "text", "ok"],
         "id long, n_slides int, n_chars int, text string, ok boolean",
         content_col, id_col,
     )
@@ -3070,33 +3000,14 @@ def build_pptx_blob(doc_id: int) -> bytes:
     return blob
 
 
-def _attach_office_blob(df: DataFrame, build, id_col: str) -> DataFrame:
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
-
-
 def attach_xlsx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the XLSX fixture blobs."""
-    return _attach_office_blob(df, build_xlsx_blob, id_col)
+    return attach_blobs(df, build_xlsx_blob, id_col)
 
 
 def attach_pptx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the PPTX fixture blobs."""
-    return _attach_office_blob(df, build_pptx_blob, id_col)
+    return attach_blobs(df, build_pptx_blob, id_col)
 
 
 # ---- EPUB / RTF: the remaining document-container text mass ----------
@@ -3200,7 +3111,6 @@ def epub_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_chapters", "n_chars", "text", "ok"],
         "id long, n_chapters int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -3285,7 +3195,7 @@ def build_epub_blob(doc_id: int) -> bytes:
 
 def attach_epub_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EPUB fixture blobs."""
-    return _attach_office_blob(df, build_epub_blob, id_col)
+    return attach_blobs(df, build_epub_blob, id_col)
 
 
 _RTF_SKIP_DESTS = frozenset((
@@ -3473,7 +3383,6 @@ def rtf_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_paragraphs", "n_chars", "text", "ok"],
         "id long, n_paragraphs int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -3543,7 +3452,7 @@ def build_rtf_blob(doc_id: int) -> bytes:
 
 def attach_rtf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RTF fixture blobs."""
-    return _attach_office_blob(df, build_rtf_blob, id_col)
+    return attach_blobs(df, build_rtf_blob, id_col)
 
 
 # ---- EML: RFC 822 / MIME mail — mail corpora are core training mass --
@@ -3697,8 +3606,6 @@ def eml_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "subject", "sender", "n_parts", "n_chars", "text",
-         "ok"],
         "id long, subject string, sender string, n_parts int, "
         "n_chars int, text string, ok boolean",
         content_col, id_col,
@@ -3814,7 +3721,7 @@ def build_eml_blob(doc_id: int) -> bytes:
 
 def attach_eml_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EML fixture blobs."""
-    return _attach_office_blob(df, build_eml_blob, id_col)
+    return attach_blobs(df, build_eml_blob, id_col)
 
 
 # ---- ODF: OpenDocument text / spreadsheet / presentation ------------
@@ -4024,7 +3931,6 @@ def odf_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "kind", "n_units", "n_chars", "text", "ok"],
         "id long, kind string, n_units int, n_chars int, "
         "text string, ok boolean",
         content_col, id_col,
@@ -4155,7 +4061,7 @@ def build_odf_blob(doc_id: int) -> bytes:
 
 def attach_odf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ODF fixture blobs."""
-    return _attach_office_blob(df, build_odf_blob, id_col)
+    return attach_blobs(df, build_odf_blob, id_col)
 
 
 # ---- mbox: the mailbox container over the EML extractor -------------
@@ -4236,7 +4142,6 @@ def mbox_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_messages", "n_chars", "text", "ok"],
         "id long, n_messages int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -4283,4 +4188,4 @@ def build_mbox_blob(doc_id: int) -> bytes:
 
 def attach_mbox_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the mbox fixture blobs."""
-    return _attach_office_blob(df, build_mbox_blob, id_col)
+    return attach_blobs(df, build_mbox_blob, id_col)

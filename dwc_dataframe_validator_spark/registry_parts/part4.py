@@ -758,7 +758,6 @@ def image_phash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cross-class distances ≫ threshold, so extra candidates all
         # fail the Hamming verify)
         probe_ahash=True,
-        backend="pure",  # oracle determinism: never the native codec
     )
     return clusters.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_members")

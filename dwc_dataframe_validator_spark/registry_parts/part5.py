@@ -103,8 +103,7 @@ def cross_format_image_dedup_check(spark: SparkSession, sf_dir: str) -> DataFram
     base-class clusters with twice the per-class document count."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     clusters = multimodal.image_phash_dedup(
-        multimodal.attach_xfmt_blobs(docs), "content", "id",
-        backend="pure",  # oracle determinism: never the native codec
+        multimodal.attach_xfmt_blobs(docs), "content", "id"
     )
     return clusters.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_members")

@@ -586,7 +586,7 @@ def gif_anim_frame_hash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates (ok=false)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return multimodal.video_frame_hashes(
-        multimodal.attach_gif_anim_blob(docs), backend="pure"
+        multimodal.attach_gif_anim_blob(docs)
     )
 
 
@@ -793,9 +793,7 @@ def video_frame_hash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ok=false).  First oracle-exact VIDEO query — the frame-sample
     tier stops being rows-only."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.video_frame_hashes(
-        multimodal.attach_avi_blob(docs), backend="pure"
-    )
+    return multimodal.video_frame_hashes(multimodal.attach_avi_blob(docs))
 
 
 QUERIES["video_frame_hash_check"] = video_frame_hash_check
@@ -812,9 +810,7 @@ def video_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sit ≥ 29 dHash bits apart (pinned in pytest), so clusters are
     exactly the classes — which the oracle states arithmetically."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    clusters = multimodal.video_near_dup(
-        multimodal.attach_avi_blob(docs), backend="pure"
-    )
+    clusters = multimodal.video_near_dup(multimodal.attach_avi_blob(docs))
     return clusters.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n_members")
     )
@@ -937,7 +933,7 @@ def video_aligned_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped per-hash buckets bound the pair join."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     clusters = multimodal.video_near_dup_aligned(
-        multimodal.attach_avi_trim_blob(docs), backend="pure"
+        multimodal.attach_avi_trim_blob(docs)
     )
     return clusters.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n_members")
@@ -1766,11 +1762,11 @@ def image_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = multimodal.attach_png_blob(docs)
     empty = spark.createDataFrame([], "fingerprint string")
     s1 = image_survivors(
-        blobs.filter(F.col("id") < 250), empty, backend="pure"
+        blobs.filter(F.col("id") < 250), empty
     ).localCheckpoint(eager=True)
     seen = s1.select(F.col("dhash").alias("fingerprint"))
     s2 = image_survivors(
-        blobs.filter(F.col("id") >= 250), seen, backend="pure"
+        blobs.filter(F.col("id") >= 250), seen
     )
     return s1.unionByName(s2).select(
         F.col("id").alias("doc_id"), "dhash"
@@ -1867,18 +1863,18 @@ def image_ingest_finalize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = multimodal.attach_png_blob(docs)
     empty = spark.createDataFrame([], "fingerprint string")
     s1 = image_survivors(
-        blobs.filter(F.col("id") < 170), empty, backend="pure"
+        blobs.filter(F.col("id") < 170), empty
     ).localCheckpoint(eager=True)
     seen1 = s1.select(F.col("dhash").alias("fingerprint"))
     s2 = image_survivors(
         blobs.filter((F.col("id") >= 170) & (F.col("id") < 340)),
-        seen1, backend="pure",
+        seen1,
     ).localCheckpoint(eager=True)
     seen2 = seen1.unionByName(
         s2.select(F.col("dhash").alias("fingerprint"))
     )
     s3 = image_survivors(
-        blobs.filter(F.col("id") >= 340), seen2, backend="pure"
+        blobs.filter(F.col("id") >= 340), seen2
     )
     survivors = s1.unionByName(s2).unionByName(s3)
     return multimodal.image_hash_near_dup(
@@ -1906,7 +1902,7 @@ def _image_resize_oracle() -> str:
             if d % 17 and d % 13
         )
         blob = multimodal.build_png_blob(did)
-        px = multimodal.decode_image_pixels(blob, "pure")
+        px = multimodal.decode_image_pixels(blob)
         small = multimodal.image_resize_pixels(px, 8, 8, "bilinear")
         rows[cls] = (
             small.shape[2],
@@ -1944,7 +1940,7 @@ def image_resize_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     out = multimodal.resize_images(
         multimodal.attach_png_blob(docs), 8, 8,
-        mode="bilinear", backend="pure",
+        mode="bilinear",
     )
     return out.select(
         F.col("id").alias("doc_id"),

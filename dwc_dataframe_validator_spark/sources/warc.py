@@ -41,7 +41,8 @@ import pandas as pd
 # neither decodes keeps its raw bytes with ``body_decoded=false``.
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.payload_cache import attach_blobs, map_payloads
 
 WARC_RECORD_SCHEMA = (
     "path string, record_index long, warc_type string, "
@@ -151,7 +152,8 @@ def iter_warc_records(raw: bytes):
             if not eof:
                 try:
                     chunk = gz.read(_CHUNK)
-                except OSError:
+                except (OSError, EOFError, zlib.error):
+                    # corrupt member, or a file cut mid-member
                     yield None, None, False
                     return
                 if chunk:
@@ -278,64 +280,53 @@ def decode_warc_records(
     """Parse a BINARY COLUMN of single WARC records — the
     record-per-row shape a Kafka/stream feed or an exploded archive
     delivers (``read_warc`` is the whole-file face; this is the
-    columnar one, same parser core).  Arrow-batched ``mapInPandas``,
-    one ``parse_warc_member`` call per blob; NULL or malformed blobs
-    yield ``ok=false`` rows with NULL fields, never task failures.
-    The id column keeps its name AND type (string keys from a Kafka
-    feed work as-is — the output schema is derived, not hardcoded)."""
+    columnar one, same parser core).  Arrow-batched, one
+    ``parse_warc_member`` call per blob; a gzip record inflates under
+    the ``_MAX_BODY`` cap.  NULL, torn, corrupt or over-cap blobs yield
+    ``ok=false`` rows with NULL fields (the ``map_payloads``
+    contract).  The id column keeps its name AND type (string keys
+    from a Kafka feed work as-is — the output schema is derived, not
+    hardcoded)."""
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = (
         f"`{id_col}` {id_type}, warc_type string, target_uri string, "
         "warc_date string, content_type string, content_length long, "
         "payload binary, ok boolean"
     )
+    bad = ((None, None, None, None, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tail(b: bytes):
+        h, payload, _ = parse_warc_member(_gunzip_record(b))
+        if h is None:
+            return bad
+        dec = lambda k: (  # noqa: E731
+            h.get(k, b"").decode("utf-8", "replace") or None
+        )
+        return ((dec(_H_TYPE), dec(_H_URI), dec(_H_DATE), dec(_H_CTYPE),
+                 len(payload), payload, True),)
 
-        bad = (None, None, None, None, None, None, False)
+    return map_payloads(df, tail, out_schema, content_col, id_col, bad)
 
-        def tail(b: bytes):
-            if b[:2] == _GZIP_MAGIC:
-                try:
-                    b = gzip.decompress(b)
-                except OSError:
-                    return bad
-            h, payload, _ = parse_warc_member(b)
-            if h is None:
-                return bad
-            dec = lambda k: (  # noqa: E731
-                h.get(k, b"").decode("utf-8", "replace") or None
-            )
-            return (dec(_H_TYPE), dec(_H_URI), dec(_H_DATE),
-                    dec(_H_CTYPE), len(payload), payload, True)
 
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "warc_type", "target_uri", "warc_date",
-                         "content_type", "content_length", "payload",
-                         "ok"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[content_col].alias(content_col)
-    ).mapInPandas(run, out_schema)
+def _gunzip_record(b: bytes) -> bytes:
+    """A gzip-member record inflated under the ``_MAX_BODY`` cap
+    (``_inflate_capped``); plain records pass through.  A torn,
+    corrupt or over-cap member raises, which the caller's
+    ``map_payloads`` turns into its ``bad`` row."""
+    if b[:2] != _GZIP_MAGIC:
+        return b
+    out = _inflate_capped(b, 16 + 15)
+    if out is None:
+        raise ValueError("torn, corrupt or over-cap gzip record")
+    return out
 
 
 def decode_warc_records_text(
     df: DataFrame, content_col: str = "record", id_col: str = "id"
 ) -> DataFrame:
     """FUSED parse + charset-aware payload text decode (r20 opt,
-    guide §4/§8 — the ``pdf_text_from_ids`` pattern): one
-    ``mapInPandas`` emitting, per record blob,
+    guide §4/§8 — the ``pdf_text_from_ids`` pattern): one Arrow map
+    emitting, per record blob,
 
         (id, target_uri, encoding, encoding_source, content_encoding,
          chunked, body_decoded, payload_text, ok)
@@ -358,48 +349,19 @@ def decode_warc_records_text(
         "chunked boolean, body_decoded boolean, payload_text string, "
         "ok boolean"
     )
+    bad = ((None, None, None, None, None, None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tail(b: bytes):
+        h, payload, _ = parse_warc_member(_gunzip_record(b))
+        if h is None:
+            return bad
+        uri = h.get(_H_URI, b"").decode("utf-8", "replace") or None
+        text, enc, source, ce, chunked, decoded = (
+            decode_payload_full(payload)
+        )
+        return ((uri, enc, source, ce, chunked, decoded, text, True),)
 
-        bad = (None, None, None, None, None, None, None, False)
-
-        def tail(b: bytes):
-            if b[:2] == _GZIP_MAGIC:
-                try:
-                    b = gzip.decompress(b)
-                except OSError:
-                    return bad
-            h, payload, _ = parse_warc_member(b)
-            if h is None:
-                return bad
-            uri = (
-                h.get(_H_URI, b"").decode("utf-8", "replace") or None
-            )
-            text, enc, source, ce, chunked, decoded = (
-                decode_payload_full(payload)
-            )
-            return (uri, enc, source, ce, chunked, decoded, text, True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "target_uri", "encoding",
-                         "encoding_source", "content_encoding",
-                         "chunked", "body_decoded", "payload_text",
-                         "ok"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[content_col].alias(content_col)
-    ).mapInPandas(run, out_schema)
+    return map_payloads(df, tail, out_schema, content_col, id_col, bad)
 
 
 #: WHATWG-style charset label normalization (the bounded subset a
@@ -1287,7 +1249,10 @@ def _zstd_decode_pure(body: bytes, zdict=None):
     (the honest ``body_decoded=false`` routing).  Output capped at
     ``_MAX_BODY`` before any copy, so an RLE/match bomb never
     balloons an executor.  Validated against the reference ``zstd``
-    CLI in pytest (skip-gated on its presence)."""
+    CLI in pytest (skip-gated on its presence).  Empty input is no
+    stream (the CLI reports an unexpected end of file) → None."""
+    if not body:
+        return None
     out = bytearray()
     pos = 0
     n = len(body)
@@ -1505,8 +1470,8 @@ def decode_warc_payload_text(
     ``body_decoded=false``).  Returns ``(id, encoding,
     encoding_source, content_encoding, chunked, body_decoded,
     payload_text)`` — all surfaced as columns so gates can filter or
-    stratify on them.  Arrow-batched ``mapInPandas``, map-side, no
-    shuffle; NULL payloads stay NULL with NULL encoding."""
+    stratify on them.  Arrow-batched, map-side, no shuffle; NULL
+    payloads stay NULL with NULL encoding."""
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = (
         f"`{id_col}` {id_type}, encoding string, encoding_source string, "
@@ -1514,33 +1479,13 @@ def decode_warc_payload_text(
         "payload_text string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tail(b: bytes):
+        text, enc, source, ce, chunked, decoded = decode_payload_full(b)
+        return ((enc, source, ce, chunked, decoded, text),)
 
-        def tail(b: bytes):
-            text, enc, source, ce, chunked, decoded = (
-                decode_payload_full(b)
-            )
-            return (enc, source, ce, chunked, decoded, text)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[payload_col]):
-                if blob is None:
-                    rows.append((i, None, None, None, None, None, None))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "encoding", "encoding_source",
-                         "content_encoding", "chunked", "body_decoded",
-                         "payload_text"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[payload_col].alias(payload_col)
-    ).mapInPandas(run, out_schema)
+    return map_payloads(
+        df, tail, out_schema, payload_col, id_col, ((None,) * 6,)
+    )
 
 
 def build_warc_record(
@@ -1861,59 +1806,22 @@ def attach_content_encoding_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, payload) with the br/zstd fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_content_encoding_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_content_encoding_blob, id_col, "id long, payload binary"
     )
 
 
 def attach_encoded_http_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, payload) with the wire-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_encoded_http_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_encoded_http_blob, id_col, "id long, payload binary"
     )
 
 
 def attach_charset_http_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, payload) with the charset-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_charset_http_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_charset_http_blob, id_col, "id long, payload binary"
     )
 
 
@@ -2049,52 +1957,23 @@ def zstd_dict_decode(
 ) -> DataFrame:
     """(id, n_bytes, text, ok) decoding each frame against the
     SUPPLIED dictionary via the pure tier — map-side Arrow, the
-    storage-dictionary twin of the wire decode face."""
-    from typing import Iterator
+    storage-dictionary twin of the wire decode face.  The dictionary
+    is parsed once, on the driver, not once per task."""
+    zd = _zstd_parse_dictionary(dictionary)
+    bad = ((None, None, False),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tail(b: bytes):
+        got = _zstd_decode_pure(b, zd)
+        if got is None:
+            return bad
+        return ((len(got), got.decode("utf-8", "replace"), True),)
 
-        zd = _zstd_parse_dictionary(dictionary)
-
-        def tail(b: bytes):
-            got = _zstd_decode_pure(b, zd)
-            if got is None:
-                return (None, None, False)
-            return (len(got), got.decode("utf-8", "replace"), True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows, columns=["id", "n_bytes", "text", "ok"]
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, "id long, n_bytes int, text string, ok boolean"
+    return map_payloads(
+        df, tail, "id long, n_bytes int, text string, ok boolean",
+        content_col, id_col, bad,
     )
 
 
 def attach_zstd_dict_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the dictionary-zstd fixture frames."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_zstd_dict_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_zstd_dict_blob, id_col)

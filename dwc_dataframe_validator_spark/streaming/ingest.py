@@ -510,7 +510,6 @@ def image_survivors(
     content_col: str = "content",
     id_col: str = "id",
     prune_store_partitions: bool = False,
-    backend: str = "auto",
 ) -> DataFrame:
     """Survivors of one IMAGE slice against a dHash ``store`` (rows
     with a ``fingerprint`` column of 16-hex dHashes): ``(id, width,
@@ -538,7 +537,7 @@ def image_survivors(
     from ..operators import multimodal
 
     hashes = multimodal.image_pixel_hashes(
-        batch_df, content_col, id_col, backend=backend
+        batch_df, content_col, id_col
     ).filter("ok")
     # min-id-per-dhash via groupBy + min_by(struct): partial
     # aggregation combines map-side, so a pathologically ubiquitous
@@ -587,7 +586,6 @@ def image_ingest_batch(
     out_path: str,
     content_col: str = "content",
     id_col: str = "id",
-    backend: str = "auto",
 ) -> None:
     """One replay-safe step of cross-batch IMAGE dedup — the
     ``foreachBatch`` body behind ``image_ingest_sink``, same marker
@@ -611,20 +609,6 @@ def image_ingest_batch(
         store, bits, meta = incremental.load_fingerprint_index(
             spark, index_path
         )
-        # refuse to hash this batch under a different decoder than
-        # built the store: dHashes of the same JPEG bytes differ
-        # across codecs, so a backend switch (container upgrade,
-        # explicit arg change) would silently stop exact dedup from
-        # ever matching the accumulated fingerprints
-        recorded = meta.get("decode_backend")
-        if recorded is not None and recorded != backend:
-            raise ValueError(
-                f"image index at {index_path!r} was built with "
-                f"backend={recorded!r} but this run passed "
-                f"backend={backend!r} — perceptual hashes are not "
-                "comparable across decoders; pass the recorded "
-                "backend or rebuild the index"
-            )
         blob = sketch.bloom_pack_bytes(bits, meta["m"])
         survivors = image_survivors(
             batch_df,
@@ -635,7 +619,6 @@ def image_ingest_batch(
             content_col=content_col,
             id_col=id_col,
             prune_store_partitions=True,
-            backend=backend,
         ).localCheckpoint(eager=True)
         survivors.write.mode("overwrite").parquet(batch_dir)
     new_keys = (
@@ -646,7 +629,7 @@ def image_ingest_batch(
         )
     )
     incremental.save_fingerprint_index(
-        new_keys, index_path, mode="append", decode_backend=backend
+        new_keys, index_path, mode="append"
     )
     _touch(spark, marker)
 
@@ -660,7 +643,6 @@ def image_ingest_sink(
     queryName: str = "image_ingest",
     checkpoint_path: str | None = None,
     trigger: dict | None = None,
-    backend: str = "auto",
 ):
     """Attach cross-batch image dedup to a stream of binary image
     blobs and return the started StreamingQuery — the multimodal
@@ -670,21 +652,12 @@ def image_ingest_sink(
     over an empty frame).  Survivors land under
     ``{out_path}/batch_id=N``; run ``image_phash_dedup`` over the
     accumulated survivors at finalization for the near-dup tier (see
-    ``image_survivors`` for why it cannot live in the loop).
-
-    The ``backend`` string is recorded in the index meta on first
-    append and later runs passing a DIFFERENT value are refused —
-    dHashes are not comparable across JPEG decoders, so a silent
-    backend switch would corrupt cross-batch exact dedup.  Note
-    ``'auto'`` resolves per-executor: on a cluster where only some
-    executors have PIL (or across container-image upgrades), pin
-    ``'pure'`` or ``'pil'`` explicitly so every batch hashes under
-    one decoder."""
+    ``image_survivors`` for why it cannot live in the loop)."""
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         image_ingest_batch(
             batch_df, batch_id, index_path, out_path,
-            content_col=content_col, id_col=id_col, backend=backend,
+            content_col=content_col, id_col=id_col,
         )
 
     writer = stream.writeStream.foreachBatch(body).queryName(queryName)

@@ -250,7 +250,7 @@ def test_tiff_pixel_decode_tier():
             assert dec is not None and (dec == want).all(), (cls, v)
             # the shared dispatch reaches it too
             assert (
-                mm.decode_image_pixels(blob, "pure") == want
+                mm.decode_image_pixels(blob) == want
             ).all(), (cls, v)
     # plants
     for d in range(120):
@@ -303,7 +303,7 @@ def test_ico_favicon_decode_tier():
         ):
             dec = mm.ico_decode_pixels(blob)
             assert dec is not None and (dec == px).all(), cls
-            assert (mm.decode_image_pixels(blob, "pure") == px).all()
+            assert (mm.decode_image_pixels(blob) == px).all()
     for d in range(120):
         blob = mm.build_ico_blob(d)
         if d % 17 == 0:

@@ -524,10 +524,8 @@ def test_multimodal_stub_pipeline(docs):
 
 
 def test_multimodal_decode_backend_guard(spark, docs):
-    # r9: the non-fake path no longer needs PIL — with PIL installed it
-    # does a PIL header decode, without it the codec-free pure-byte
-    # header parser takes over.  The real-world 1x1 PNG + garbage probe
-    # must behave identically on EITHER branch.
+    # the non-fake path is the codec-free pure-byte header parser: a
+    # real-world 1x1 PNG decodes, garbage flags
     import base64
     png = base64.b64decode(
         b"iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR4"
@@ -541,8 +539,7 @@ def test_multimodal_decode_backend_guard(spark, docs):
     assert rows[1]["ok"] and (rows[1]["width"], rows[1]["height"]) == (1, 1)
     assert not rows[2]["ok"]
 
-    # a parseable WAV is NOT an image: ok=False on the header backend
-    # (PIL would also reject it — ok semantics agree across backends)
+    # a parseable WAV is NOT an image: ok=False
     import struct
     fmt_body = struct.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16)
     wav = (b"RIFF" + struct.pack("<I", 100) + b"WAVE"
@@ -550,13 +547,8 @@ def test_multimodal_decode_backend_guard(spark, docs):
     wdf = spark.createDataFrame(
         [(3, bytearray(wav))], "id long, content binary"
     )
-    wrows = multimodal.decode_images(wdf, backend="header").collect()
+    wrows = multimodal.decode_images(wdf).collect()
     assert not wrows[0]["ok"]
-
-    # unknown / unavailable backends fail fast, not mid-job
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        multimodal.decode_images(df, backend="magick")
 
 
 def test_parse_media_header_formats_and_adversarial():
@@ -2706,12 +2698,13 @@ def test_two_digit_year_century_pivot(spark):
 
 
 def test_sample_frames_backend_branches(spark):
-    """Frame sampler backend contract, exercising whichever branch the
-    environment supports (mirrors the PIL test pattern): with a video
-    backend importable, real decode produces (id, frame_idx, PNG
-    bytes); without one, fake=False must fail loudly with
-    NotImplementedError and the deterministic stub must keep its exact
-    byte-offset semantics (oracled in the registry)."""
+    """Frame sampler contract: bytes that are no codec-free container
+    (here plain text) yield zero frames, never a failed query, and the
+    deterministic stub keeps its exact byte-offset semantics (oracled
+    in the registry); a non-positive ``max_frames`` is the caller's
+    mistake and raises while the frame is built."""
+    import pytest as _pytest
+
     from dwc_dataframe_validator_spark.operators import multimodal
 
     docs = spark.createDataFrame(
@@ -2719,21 +2712,11 @@ def test_sample_frames_backend_branches(spark):
     )
     blobs = multimodal.attach_text_blob(docs)
 
-    if multimodal._video_backend_available():
-        rows = multimodal.sample_frames(blobs).collect()
-        # text bytes are not a decodable container → zero frames, no
-        # task failure (the corrupt-blob contract)
-        assert rows == []
-    else:
-        import pytest as _pytest
+    assert multimodal.sample_frames(blobs).collect() == []
+    with _pytest.raises(ValueError):
+        multimodal.sample_frames(blobs, max_frames=0)
 
-        with _pytest.raises(Exception) as exc:
-            multimodal.sample_frames(blobs).collect()
-        assert "NotImplementedError" in str(exc.value) or isinstance(
-            exc.value, NotImplementedError
-        )
-
-    # the stub branch is identical regardless of backend presence
+    # fake=True: the deterministic byte-offset stub
     stub = {(r.id, r.frame_idx): bytes(r.frame_bytes)
             for r in multimodal.sample_frames(blobs, fake=True).collect()}
     b = "hello world frame payload".encode()
@@ -4620,99 +4603,32 @@ def test_png_pixel_roundtrip_all_types():
     assert (dec == want).all()
 
 
-def test_png_decode_backend_equivalence(monkeypatch):
-    """r12: when PIL is importable the pixel decode routes through it;
-    PNG is lossless, so PIL pixels must be bit-identical to the pure
-    defilter on the filter-cycling fixtures (every filter type, every
-    color type incl. the palette index plane).  Skipped where PIL is
-    absent — there the pure path is the only path and the round-trip
-    test above pins it."""
-    import pytest as _pytest
-
-    from dwc_dataframe_validator_spark.operators import multimodal as mm
-
-    if not mm._pil_available():
-        _pytest.skip("PIL not installed — pure defilter is the only path")
-    for cls in range(24):
-        px, pal = mm._png_fixture_pixels(cls)
-        blob = mm.png_encode(px, pal)
-        via_pil = mm.png_decode_pixels(blob)
-        with monkeypatch.context() as m:
-            m.setattr(mm, "_pil_available", lambda: False)
-            pure = mm.png_decode_pixels(blob)
-        assert via_pil.shape == pure.shape, cls
-        assert (via_pil == pure).all(), cls
-
-
 def test_decode_image_pixels_backend_contract():
-    """r12: the JPEG-tier backend switch — 'pure' (default, what the
-    registry oracle runs) keeps the deterministic contract: PNG
-    decodes, JPEG raises the documented stub, junk is None; 'pil'
-    without PIL raises ImportError instead of silently degrading;
-    unknown backends are rejected; PNG routes through the shared
-    guarded path on EVERY backend."""
+    """The pure decoders' deterministic contract (what the registry
+    oracle runs): PNG decodes, junk is None, a headers-only JPEG is
+    None and real baseline/progressive JPEGs decode."""
     import numpy as np
-    import pytest as _pytest
 
     from dwc_dataframe_validator_spark.operators import multimodal as mm
 
     px = np.arange(27, dtype=np.uint8).reshape(3, 3, 3)
     png = mm.png_encode(px)
     jpeg = mm.build_png_blob(13)  # the fixture's minimal valid JPEG
-    for backend in ("pure",) + (("pil", "auto") if mm._pil_available() else ()):
-        assert (mm.decode_image_pixels(png, backend) == px).all(), backend
+    assert (mm.decode_image_pixels(png) == px).all()
     assert mm.decode_image_pixels(b"junk") is None
     # r12: baseline JPEG decodes FOR REAL on the pure path; the
     # headers-only fixture plant (no scan) is None → ok=false, and a
     # real encoded blob round-trips within quantization error
-    assert mm.decode_image_pixels(jpeg, "pure") is None
+    assert mm.decode_image_pixels(jpeg) is None
     real = mm.jpeg_encode(np.full((8, 8, 1), 130, np.uint8))
-    assert (mm.decode_image_pixels(real, "pure") == 130).all()
+    assert (mm.decode_image_pixels(real) == 130).all()
     # r13: progressive is REAL — the headers-only fixture relabeled
     # SOF2 has no scan data, so it's corrupt → None (not a raise); a
     # genuinely progressive encode decodes to the baseline's pixels
     sof2 = jpeg.replace(b"\xff\xc0", b"\xff\xc2")
-    assert mm.decode_image_pixels(sof2, "pure") is None
+    assert mm.decode_image_pixels(sof2) is None
     prog = mm.jpeg_encode(np.full((8, 8, 1), 130, np.uint8), progressive=True)
-    assert (mm.decode_image_pixels(prog, "pure") == 130).all()
-    with _pytest.raises(ValueError):
-        mm.decode_image_pixels(png, "turbo")
-    if not mm._pil_available():
-        with _pytest.raises(ImportError):
-            mm.decode_image_pixels(jpeg, "pil")
-
-
-def test_image_pixel_hashes_pil_backend_jpeg(spark):
-    """r12: with PIL installed, backend='pil' hashes JPEG-tier blobs
-    through the same integer hash grid (ok=true, 16-hex hashes) while
-    the default 'pure' run flags the same rows ok=false.  Skipped in
-    PIL-less containers — there the pure contract above is the whole
-    story."""
-    import io
-
-    import numpy as np
-    import pytest as _pytest
-
-    from dwc_dataframe_validator_spark.operators import multimodal as mm
-
-    if not mm._pil_available():
-        _pytest.skip("PIL not installed — JPEG tier stays the honest stub")
-    from PIL import Image
-
-    buf = io.BytesIO()
-    arr = (np.indices((32, 32)).sum(0) * 4 % 256).astype(np.uint8)
-    Image.fromarray(arr, "L").save(buf, format="JPEG")
-    rows = [(1, buf.getvalue()), (2, mm.png_encode(
-        np.arange(27, dtype=np.uint8).reshape(3, 3, 3)))]
-    df = spark.createDataFrame(rows, "id long, content binary")
-    pure = {r["id"]: r["ok"] for r in mm.image_pixel_hashes(df).collect()}
-    assert pure == {1: False, 2: True}
-    pil = {
-        r["id"]: r
-        for r in mm.image_pixel_hashes(df, backend="pil").collect()
-    }
-    assert pil[1]["ok"] and len(pil[1]["dhash"]) == 16
-    assert pil[2]["ok"]
+    assert (mm.decode_image_pixels(prog) == 130).all()
 
 
 def test_png_decode_malformed_and_stub():
@@ -5496,7 +5412,7 @@ def test_justext_published_revision_exceptions(spark):
 def test_avi_mjpeg_video_tier(spark):
     """r13: the first REAL video tier — MJPEG-in-AVI RIFF walk,
     per-frame JPEG decode, frame sampling through sample_frames'
-    codec-free branch (no imageio needed), near-dup clustering across
+    codec-free branch, near-dup clustering across
     baseline/progressive re-encodes, honest non-MJPG raise, and
     truncation fuzz."""
     import itertools
@@ -5529,8 +5445,28 @@ def test_avi_mjpeg_video_tier(spark):
     ) >= 25
 
     # non-MJPG vids handler: honest NotImplementedError
+    h264 = blob.replace(b"vidsMJPG", b"vidsH264")
     with _pytest.raises(NotImplementedError):
-        mm.avi_mjpeg_frames(blob.replace(b"vidsMJPG", b"vidsH264"))
+        mm.avi_mjpeg_frames(h264)
+
+    # per-blob frame dispatch: the codec-free MJPEG path decodes every
+    # sampled frame; containers that need an external codec (a
+    # non-MJPG AVI, MP4/ISO-BMFF) yield no frames, and the operator
+    # flags each with one ok=false row
+    px = mm._video_blob_frame_pixels(blob, 4)
+    assert len(px) == len(frames) and all(p is not None for p in px)
+    with _pytest.raises(NotImplementedError):
+        mm._video_blob_frame_pixels(h264, 4)
+    mp4ish = bytes(4) + b"ftyp" + b"isom" + bytes(64)
+    assert mm._video_blob_frame_pixels(mp4ish, 4) is None
+    codec = spark.createDataFrame(
+        [(1, bytearray(h264)), (2, bytearray(mp4ish))],
+        "id long, content binary",
+    )
+    assert [tuple(r) for r in mm.video_frame_hashes(codec).orderBy("id")
+            .collect()] == [
+        (i, None, None, 0, 0, None, None, False) for i in (1, 2)
+    ]
 
     # truncation fuzz never raises (beyond the honest codec tier)
     for cut in range(0, len(blob), 5):
@@ -5539,8 +5475,8 @@ def test_avi_mjpeg_video_tier(spark):
         except NotImplementedError:
             pass
 
-    # sample_frames codec-free AVI branch works WITHOUT imageio and
-    # returns the raw JPEG frame bytes; corrupt AVI -> zero frames
+    # sample_frames' codec-free AVI branch returns the raw JPEG frame
+    # bytes; corrupt AVI -> zero frames
     df = spark.createDataFrame([(5,), (17,)], "doc_id long")
     rows = mm.sample_frames(mm.attach_avi_blob(df), fake=False).collect()
     got = {(r["id"], r["frame_idx"]): bytes(r["frame_bytes"]) for r in rows}

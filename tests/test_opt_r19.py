@@ -105,7 +105,7 @@ def test_image_pixel_hashes_identical_on_duplicate_rows(spark):
         if b is None:
             return (0, 0, 0, None, None, False)
         try:
-            px = mm.decode_image_pixels(bytes(b), "pure")
+            px = mm.decode_image_pixels(bytes(b))
         except NotImplementedError:
             px = None
         if px is None:
@@ -132,7 +132,7 @@ def test_video_frame_hashes_identical_on_duplicate_rows(spark):
         [(1, blob), (2, torn), (3, blob), (4, None)],
         "id long, content binary",
     )
-    out = mm.video_frame_hashes(df, backend="pure").collect()
+    out = mm.video_frame_hashes(df).collect()
     by_id = {}
     for r in out:
         by_id.setdefault(r["id"], []).append(
